@@ -4,9 +4,21 @@ The pair's correctness depends on machinery wall-clock can't verify on a
 noisy host: two unconditional interleaved passes, best-per-level by
 steal-corrected wall, and retries on visible steal (>2% pessimistic
 bound) or >10% wall dispersion (the bandwidth-contention case steal
-can't see).  Fake leg results pin each decision.
+can't see).  Fake leg results pin each decision.  The fake legs and their
+expected values describe the 32-vCPU host they were recorded on, and the
+``_host_has_32_vcpus`` fixture pins that host, since
+``bench.steal_wall_share`` divides VM-wide steal by ``os.cpu_count()``.
 """
+import os
+
+import pytest
+
 import bench
+
+
+@pytest.fixture(autouse=True)
+def _host_has_32_vcpus(monkeypatch):
+    monkeypatch.setattr(os, "cpu_count", lambda: 32)
 
 
 def _fake_leg_factory(script):
