@@ -281,10 +281,12 @@ def canonical_entities(
     # rows emit duplicate edges — union-find is insensitive, the
     # distributed path dedups inside _symmetric, and the driver-path
     # threshold count stays conservative (over-counts only).  The window
-    # is sort-based (spills, never materializes a group), so a hot key
-    # stays memory-safe — same bound as the old groupBy.
+    # buffers each key group in a spillable buffer, so a hot key stays
+    # memory-safe — same bound as the old groupBy.  NULL mentions are
+    # dropped before the window: they could never become an edge (min
+    # ignores NULLs, and mention != rep is NULL for them).
     edges = (
-        keys.filter(F.col("key").isNotNull())
+        keys.filter(F.col("key").isNotNull() & F.col("mention").isNotNull())
         .withColumn("rep", F.min("mention").over(Window.partitionBy("key")))
         .filter(F.col("mention") != F.col("rep"))
         .select(F.col("mention").alias("src"), F.col("rep").alias("dst"))

@@ -3,7 +3,10 @@
 The per-row inference loop of the reference (reference: models/qa_model.py:
 140-171, one driver-side batch at a time) becomes ONE distributed lineage:
 
-    windows x broadcast(question registry)  ->  mapInPandas(batched model)
+    documents -> mapInPandas(windows x question registry -> batched model)
+
+``run_extraction`` is the only kernel; its ``emit`` mode picks per-window
+candidates, top-1 triples, or grounded spans.
 
 The extractor is pluggable and loaded once per executor Python worker
 (module-level cache), consuming Arrow record batches — no per-row Python in
@@ -18,7 +21,6 @@ the hot path.  Two implementations:
 from __future__ import annotations
 
 import math
-import os
 import re
 from typing import Iterator, List, Optional, Tuple
 
@@ -487,16 +489,15 @@ EXTRACTION_SCHEMA = (
 
 
 def top1_prereduce_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Map-side combiner for the top-1-window stage (r7).
+    """In-batch top-1 window of run_extraction's 'triples'/'spans' modes.
 
     Keeps, per (conv_id, qa_id) within one batch, the row minimizing
     (na_count asc, prob desc, window_id asc) — exactly top1_window's
     use_fewer_na=True ordering (na via str.count('N/A'), the literal twin
     of the size(split(...))-1 expression).  argmin is associative, so
-    feeding per-batch winners into the downstream top1_window yields the
-    identical global winner under ANY partitioning — this only shrinks
-    the Arrow crossing and the top-1 shuffle from |windows x questions|
-    rows to |documents x questions|.
+    per-batch winners fed into top1_window would still give the identical
+    global winner; with one document row per conv_id the batch winner
+    already is that winner, and no top-1 shuffle is needed.
     """
     if len(pdf) <= 1:
         return pdf
@@ -517,50 +518,6 @@ def top1_prereduce_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def run_extraction(
-    windows: DataFrame,
-    predicates: Optional[List[Predicate]] = None,
-    extractor: str = "regex",
-    model_name: Optional[str] = None,
-    model_cost_ms: float = 0.0,
-    choose_question: str = "first",
-    question_seed: int = 13,
-    tasks_per_core: Optional[int] = None,
-) -> DataFrame:
-    """mapInPandas batched extraction over *window* rows.
-
-    The question registry rides in the closure (it is tiny and static), so
-    each window's text crosses the Arrow boundary once — not once per
-    question — and the output carries ids + predictions only; window
-    payloads are rejoined downstream by (conv_id, window_id) when needed.
-    A seq2seq extractor expands (window x question) batches internally,
-    which is also where the GPU wants them.  ``choose_question`` selects
-    paraphrase variants ('first'/'random'/'all'; reference
-    basic_to_squad.py:16-41).
-    """
-    preds = predicates or DEFAULT_PREDICATES
-    registry_spec = [
-        (p.qa_id, p.field, tuple(p.questions), tuple(p.subfields))
-        for p in preds
-    ]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_extractor(extractor, model_name, model_cost_ms)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield model.predict_windows(pdf, registry_spec,
-                                        choose=choose_question,
-                                        seed=question_seed)
-
-    cols = ["conv_id", "window_id", "window_offset", "window_text"]
-    slim = windows.select(*cols)
-    # pin parallelism for the model stage (see run_extraction_from_documents)
-    target = _model_stage_tasks(windows, tasks_per_core)
-    slim = slim.repartition(target)
-    return slim.mapInPandas(gen, schema=EXTRACTION_SCHEMA)
-
-
-def run_extraction_to_triples(
     documents: DataFrame,
     window_spec,
     predicates: Optional[List[Predicate]] = None,
@@ -569,30 +526,51 @@ def run_extraction_to_triples(
     model_cost_ms: float = 0.0,
     choose_question: str = "first",
     question_seed: int = 13,
-    tasks_per_core: Optional[int] = None,
-    pre_partitioned: bool = False,
+    emit: str = "triples",
 ) -> DataFrame:
-    """Fully fused inference stage (r7): windows -> batched extraction ->
-    top-1 winner -> star triples in ONE Python crossing.
+    """The extraction kernel: (conv_id, text) documents -> sliding windows
+    -> batched model -> ``emit``, in ONE Python crossing.
 
-    Safe because assemble_documents emits exactly one row per conv_id, so
-    every (conv, qa) candidate set lives inside one Arrow batch and the
-    in-batch top-1 (top1_prereduce_pdf — the exact top1_window
-    use_fewer_na ordering) IS the global winner; star_triple_rows is the
-    differential-pinned best_to_triples kernel.  Replaces
-    run_extraction_from_documents -> shuffle -> top1_window ->
-    best_to_triples (a 1.4M-row shuffle + a second Arrow roundtrip at
-    bench sf1.0) on the inference path; the staged operators remain for
-    grounding/eval and the resumable catalog path.
-    Equivalence pinned by tests/test_top1_prereduce.py::
-    test_fused_triples_match_staged and the kg_triples oracle.
+    Window texts are produced and consumed inside the same Python worker —
+    they never materialize as a Spark column.  The question registry rides
+    in the closure (tiny, static), so each window crosses into the model
+    once, not once per question; a seq2seq extractor expands (window x
+    question) batches internally, which is also where the GPU wants them.
+    ``choose_question`` selects paraphrase variants ('first'/'random'/
+    'all'; reference basic_to_squad.py:16-41).
+
+    ``emit``:
+
+      scored   per-window candidates, EXTRACTION_SCHEMA — for consumers
+               that run top1_window themselves (streaming micro-batches,
+               where one conv can arrive as two session rows).
+      triples  in-batch top-1 (top1_prereduce_pdf, the exact top1_window
+               use_fewer_na ordering) -> star triples, TRIPLE_SCHEMA.
+      spans    triples + span grounding against the winning window's text
+               (postprocess.spans_pdf), SPAN_SCHEMA.
+
+    'triples' and 'spans' are only correct when each conv_id has ONE
+    document row (assemble_documents guarantees it): every (conv, qa)
+    candidate set then lives inside one Arrow batch, so the in-batch winner
+    IS the global winner.  Parity with scored -> top1_window ->
+    best_to_triples is pinned by tests/test_top1_prereduce.py and the
+    kg_triples oracle.
+
+    The kernel never repartitions: callers pin the model-stage width
+    upstream (see pipeline.extract_triples and the streaming body).
     """
     from information_extraction_t5_spark.core.windows import sliding_windows
     from information_extraction_t5_spark.operators.postprocess import (
+        SPAN_SCHEMA,
         TRIPLE_SCHEMA,
+        spans_pdf,
         triples_pdf_from_best,
     )
 
+    schema = {"scored": EXTRACTION_SCHEMA, "triples": TRIPLE_SCHEMA,
+              "spans": SPAN_SCHEMA}.get(emit)
+    if schema is None:
+        raise ValueError(f"unknown emit mode: {emit}")
     preds = predicates or DEFAULT_PREDICATES
     registry_spec = [
         (p.qa_id, p.field, tuple(p.questions), tuple(p.subfields))
@@ -615,12 +593,20 @@ def run_extraction_to_triples(
             scored = model.predict_windows(pd.DataFrame(win), registry_spec,
                                            choose=choose_question,
                                            seed=question_seed)
-            yield triples_pdf_from_best(top1_prereduce_pdf(scored))
+            if emit == "scored":
+                yield scored
+                continue
+            triples = triples_pdf_from_best(top1_prereduce_pdf(scored))
+            if emit == "spans":
+                texts = dict(zip(zip(win["conv_id"], win["window_id"]),
+                                 win["window_text"]))
+                triples = spans_pdf(triples, [
+                    texts.get(k)
+                    for k in zip(triples["conv_id"], triples["window_id"])
+                ])
+            yield triples
 
-    docs = documents.select("conv_id", "text")
-    if not pre_partitioned:
-        docs = docs.repartition(_model_stage_tasks(documents, tasks_per_core))
-    return docs.mapInPandas(gen, schema=TRIPLE_SCHEMA)
+    return documents.select("conv_id", "text").mapInPandas(gen, schema=schema)
 
 
 def _model_stage_tasks(df: DataFrame,
@@ -631,83 +617,7 @@ def _model_stage_tasks(df: DataFrame,
     co-tenant steal burst, a long conversation) delays its own lane by a
     fraction of the stage instead of idling every other lane through a
     2-wave tail — measured on the 24k-conv calibrated scaling leg (r4).
-    Precedence: explicit ``tasks_per_core`` argument (threaded from
-    PipelineConfig.model_tasks_per_core) > SPARK_GRAFT_MODEL_TASKS_PER_CORE
-    env override > default 4.  Callers should prefer the config field —
-    mutating the env leaks process-global state (ADVICE r4)."""
-    per_core = (tasks_per_core if tasks_per_core is not None
-                else int(os.environ.get("SPARK_GRAFT_MODEL_TASKS_PER_CORE",
-                                        "4")))
+    ``tasks_per_core`` is threaded from PipelineConfig.model_tasks_per_core;
+    None means the default."""
+    per_core = 4 if tasks_per_core is None else tasks_per_core
     return max(df.sparkSession.sparkContext.defaultParallelism * per_core, 8)
-
-
-def run_extraction_from_documents(
-    documents: DataFrame,
-    window_spec,
-    predicates: Optional[List[Predicate]] = None,
-    extractor: str = "regex",
-    model_name: Optional[str] = None,
-    model_cost_ms: float = 0.0,
-    choose_question: str = "first",
-    question_seed: int = 13,
-    tasks_per_core: Optional[int] = None,
-    pre_partitioned: bool = False,
-    prereduce_top1: bool = False,
-) -> DataFrame:
-    """Fused window-assembly + extraction: one Arrow crossing per document.
-
-    Window texts are produced and consumed inside the same Python worker —
-    they never materialize as a Spark column.  Use when downstream stages
-    don't need window_text (grounding off); otherwise build windows
-    explicitly and call run_extraction.
-
-    ``pre_partitioned=True`` skips the model-stage repartition: the caller
-    already pinned a REPARTITION_BY_NUM exchange upstream (e.g. on the
-    transcripts feeding assemble_documents, so assembly and the model
-    stage share ONE exchange — see pipeline.extract_candidates, r7) and
-    this stage runs narrow on that layout.
-
-    ``prereduce_top1=True`` applies top1_prereduce_pdf per output batch —
-    ONLY for consumers that feed top1_window(use_fewer_na=True) next (the
-    kg pipeline): the per-(conv, qa) winner is identical, the per-window
-    candidate rows are not emitted.
-    """
-    from information_extraction_t5_spark.core.windows import sliding_windows
-
-    preds = predicates or DEFAULT_PREDICATES
-    registry_spec = [
-        (p.qa_id, p.field, tuple(p.questions), tuple(p.subfields))
-        for p in preds
-    ]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_extractor(extractor, model_name, model_cost_ms)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            win = {"conv_id": [], "window_id": [], "window_offset": [],
-                   "window_text": []}
-            for cid, text in zip(pdf["conv_id"], pdf["text"]):
-                for w in sliding_windows(text or "", window_spec):
-                    win["conv_id"].append(cid)
-                    win["window_id"].append(w.window_id)
-                    win["window_offset"].append(w.offset)
-                    win["window_text"].append(w.text)
-            out = model.predict_windows(pd.DataFrame(win), registry_spec,
-                                        choose=choose_question,
-                                        seed=question_seed)
-            yield top1_prereduce_pdf(out) if prereduce_top1 else out
-
-    # The model stage pins its own parallelism: AQE coalesces upstream
-    # shuffles by BYTES, which is exactly wrong before a compute-heavy UDF
-    # (a few MB of documents can carry hours of model time — observed:
-    # byte-coalescing collapsed extraction to ONE task).
-    docs = documents.select("conv_id", "text")
-    if not pre_partitioned:
-        target = _model_stage_tasks(documents, tasks_per_core)
-        # round-robin with explicit count: a bare hash repartition on
-        # conv_id is collapsed by the optimizer into the upstream groupBy
-        # exchange, whose read AQE then byte-coalesces; round-robin (or a
-        # caller-side REPARTITION_BY_NUM, see pre_partitioned) survives both
-        docs = docs.repartition(target)
-    return docs.mapInPandas(gen, schema=EXTRACTION_SCHEMA)

@@ -225,8 +225,8 @@ def best_to_triples(best: DataFrame) -> DataFrame:
 
 
 def triples_pdf_from_best(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Row kernel of best_to_triples, shared with the fused
-    extraction-to-triples stage (extraction.run_extraction_to_triples)."""
+    """Row kernel of best_to_triples, shared with the fused extraction
+    kernel (extraction.run_extraction, emit='triples'/'spans')."""
     out = {
         "conv_id": [], "pred": [], "obj": [], "obj_raw": [],
         "window_id": [], "prob": [], "sent_id": [],
@@ -269,27 +269,33 @@ def ground_spans(triples_with_windows: DataFrame,
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ss, ee, hh = [], [], []
-            for obj, raw, sid, wtext in zip(
-                pdf["obj"], pdf["obj_raw"], pdf["sent_id"],
-                pdf["window_text"],
-            ):
-                target = raw if raw else obj
-                if sid is None or sid < 1 or not wtext:
-                    ss.append(None); ee.append(None); hh.append(None)
-                    continue
-                s, e, h = fuzzy_kernel.ground_answer(
-                    target, int(sid), wtext,
-                    sentence_expansion=sentence_expansion,
-                )
-                ss.append(s); ee.append(e); hh.append(h)
-            out = pdf.copy()
-            out["span_start"] = pd.array(ss, dtype="Int64")
-            out["span_end"] = pd.array(ee, dtype="Int64")
-            out["grounded"] = hh
-            yield out[
-                ["conv_id", "pred", "obj", "obj_raw", "window_id", "prob",
-                 "sent_id", "span_start", "span_end", "grounded"]
-            ]
+            yield spans_pdf(pdf, pdf["window_text"], sentence_expansion)
 
     return triples_with_windows.mapInPandas(gen, schema=SPAN_SCHEMA)
+
+
+def spans_pdf(triples: pd.DataFrame, window_texts,
+              sentence_expansion: int = 1) -> pd.DataFrame:
+    """Row kernel of ground_spans, shared with the fused extraction kernel
+    (extraction.run_extraction, emit='spans'): ``window_texts`` holds the
+    text of each triple's window, None when it is unknown."""
+    ss, ee, hh = [], [], []
+    for obj, raw, sid, wtext in zip(
+        triples["obj"], triples["obj_raw"], triples["sent_id"], window_texts,
+    ):
+        target = raw if raw else obj
+        if sid is None or sid < 1 or not wtext:
+            ss.append(None); ee.append(None); hh.append(None)
+            continue
+        s, e, h = fuzzy_kernel.ground_answer(
+            target, int(sid), wtext, sentence_expansion=sentence_expansion,
+        )
+        ss.append(s); ee.append(e); hh.append(h)
+    out = triples.copy()
+    out["span_start"] = pd.array(ss, dtype="Int64")
+    out["span_end"] = pd.array(ee, dtype="Int64")
+    out["grounded"] = hh
+    return out[
+        ["conv_id", "pred", "obj", "obj_raw", "window_id", "prob",
+         "sent_id", "span_start", "span_end", "grounded"]
+    ]

@@ -1,23 +1,24 @@
 """End-to-end KG construction: extract -> link -> canonicalize -> materialize.
 
 One declarative lineage (the reference's predict.py stages 2-8 as a single
-DataFrame program, SURVEY.md §3.3):
+DataFrame program, SURVEY.md §3.3), composed once in ``run_pipeline``:
 
     transcripts
-      -> assemble_documents            (1 shuffle: groupBy conv_id)
-      -> sliding_windows_exact         (narrow, Arrow UDF kernel)
-      -> expand_questions              (broadcast join, narrow)
-      -> run_extraction                (mapInPandas, batched model)
-      -> top1_window                   (1 shuffle: window over conv,qa)
-      -> explode_compound              (narrow)
-      -> to_triples                    (narrow)
-      -> link_aliases                  (broadcast join)
-      -> canonical_entities            (O(log n) small shuffles)
-      -> materialize nodes/edges       (partitioned write + lineage)
+      -> repartition(n, conv_id)       (the one shuffle before the model)
+      -> assemble_documents            (narrow: input already clustered)
+      -> run_extraction                (one mapInPandas: windows, batched
+                                        model, top-1 window, star triples,
+                                        spans when cfg.ground)
+      -> link_triples                  (broadcast alias join)
+      == stage_triples                 (localCheckpoint, or Catalog.stage)
+      -> canonicalize_subjects         (fuzzy LSH edges, connected
+                                        components, broadcast mapping join)
+      == stage_canonical               (Catalog only)
+      -> materialize_graph             (clustered partitioned write)
 
-Checkpointed per stage via Catalog.stage — a killed run resumes from the
-last committed snapshot (reference cache-guard semantics,
-qa_model.py:144-145).
+With a Catalog both boundaries are resumable snapshots — a killed run
+resumes from the last committed one (reference cache-guard semantics,
+qa_model.py:144-145).  Window text never becomes a Spark column.
 """
 from __future__ import annotations
 
@@ -34,21 +35,15 @@ from information_extraction_t5_spark.operators.canonicalize import (
     canonical_entities,
 )
 from information_extraction_t5_spark.operators.extraction import (
+    _model_stage_tasks,
     run_extraction,
-    run_extraction_from_documents,
 )
 from information_extraction_t5_spark.operators.linking import (
     alias_df,
     link_aliases,
 )
-from information_extraction_t5_spark.operators.postprocess import (
-    best_to_triples,
-    ground_spans,
-    top1_window,
-)
 from information_extraction_t5_spark.operators.windows import (
     assemble_documents,
-    sliding_windows_exact,
 )
 
 
@@ -63,15 +58,13 @@ class PipelineConfig:
     model_cost_ms: float = 0.0   # emulated per-window model latency (bench)
     model_tasks_per_core: Optional[int] = None
     # model-stage repartition width per core (extraction._model_stage_tasks);
-    # None = env override SPARK_GRAFT_MODEL_TASKS_PER_CORE, else default 4.
-    # Preferred over the env var: config travels with the job, the env var
-    # leaks process-global state (ADVICE r4).
+    # None = the default, 4
     choose_question: str = "first"   # 'first' | 'random' | 'all' paraphrase
     question_seed: int = 13          # seed for the 'random' md5 draw
     link_predicates: List[str] = field(
         default_factory=lambda: ["form.endereco.estado"]
     )
-    ground: bool = False          # fuzzy span grounding (extra Arrow stage)
+    ground: bool = False          # fuzzy span grounding (inside extraction)
     fuzzy_link: bool = True       # LSH-blocked fuzzy name linking
     fuzzy_link_max_dist: int = 2  # levenshtein budget for blocked pairs
     fuzzy_hash: str = "md5"       # 'md5' = oracle-replayable signatures
@@ -90,93 +83,33 @@ class PipelineConfig:
     # star contraction; size down with driver memory.
 
 
-def build_windows(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """transcripts -> (conv_id, window_id, window_text, window_offset)."""
-    docs = assemble_documents(transcripts)
-    return sliding_windows_exact(docs, cfg.window)
-
-
-def extract_candidates(spark: SparkSession, transcripts: DataFrame,
-                       cfg: PipelineConfig) -> DataFrame:
-    """transcripts -> scored per-window predictions (pre-top-1).
-
-    Fused assembly->windows->extraction: window text never materializes as
-    a Spark column (one Arrow crossing per document).
-
-    ONE exchange end to end (r7): the model-stage task count is pinned as
-    a REPARTITION_BY_NUM hash exchange on the *transcripts* — the groupBy
-    inside assemble_documents is then already clustered by conv_id (no
-    second exchange), AQE honors the user-specified partition count (no
-    byte-coalescing collapse of the model stage), and extraction runs
-    narrow on the assembled documents.  Previously assembly shuffled the
-    turns AND a round-robin repartition re-shuffled every document text."""
-    from information_extraction_t5_spark.operators.extraction import (
-        _model_stage_tasks,
-    )
-
-    target = _model_stage_tasks(transcripts, cfg.model_tasks_per_core)
-    docs = assemble_documents(transcripts.repartition(target, "conv_id"))
-    return run_extraction_from_documents(
-        docs, cfg.window,
-        extractor=cfg.extractor, model_name=cfg.model_name,
-        model_cost_ms=cfg.model_cost_ms,
-        choose_question=cfg.choose_question,
-        question_seed=cfg.question_seed,
-        tasks_per_core=cfg.model_tasks_per_core,
-        pre_partitioned=True,
-        # scored feeds top1_window(use_fewer_na=True) in
-        # candidates_to_triples: reduce to the per-(conv, qa) winner
-        # inside the model task (argmin is associative) so the Arrow
-        # crossing and the top-1 shuffle carry |docs x questions| rows
-        # instead of |windows x questions| (r7)
-        prereduce_top1=True,
-    )
-
-
 def extract_triples(spark: SparkSession, transcripts: DataFrame,
                     cfg: PipelineConfig) -> DataFrame:
-    """transcripts -> candidate triples in one exchange + one Python stage
-    (pre alias-linking); see run_extraction_to_triples (r7)."""
-    from information_extraction_t5_spark.operators.extraction import (
-        _model_stage_tasks,
-        run_extraction_to_triples,
-    )
+    """transcripts -> candidate triples (pre alias-linking; SPAN_SCHEMA
+    with cfg.ground) in one exchange + one Python stage.
 
+    The model-stage task count is pinned as a REPARTITION_BY_NUM hash
+    exchange on the *transcripts* (r7): the groupBy inside
+    assemble_documents is then already clustered by conv_id (no second
+    exchange), AQE honors the user-specified partition count (no
+    byte-coalescing collapse of the model stage), and extraction runs
+    narrow on the assembled documents."""
     target = _model_stage_tasks(transcripts, cfg.model_tasks_per_core)
     docs = assemble_documents(transcripts.repartition(target, "conv_id"))
-    return run_extraction_to_triples(
+    return run_extraction(
         docs, cfg.window,
         extractor=cfg.extractor, model_name=cfg.model_name,
         model_cost_ms=cfg.model_cost_ms,
         choose_question=cfg.choose_question,
         question_seed=cfg.question_seed,
-        tasks_per_core=cfg.model_tasks_per_core,
-        pre_partitioned=True,
+        emit="spans" if cfg.ground else "triples",
     )
 
 
-def candidates_to_triples(scored: DataFrame, cfg: PipelineConfig,
-                          spark: SparkSession,
-                          windows: Optional[DataFrame] = None) -> DataFrame:
-    """scored predictions -> linked candidate triples.
-
-    ``scored`` carries ids + predictions only — window payloads never ride
-    the top-1 shuffle; span grounding rejoins them from ``windows`` by
-    (conv_id, window_id)."""
-    slim = scored.select("conv_id", "qa_id", "window_id", "prediction", "prob")
-    best = top1_window(slim, use_fewer_na=True)
-    # fused explode+triple kernel: one Arrow crossing (the standalone
-    # explode_compound/to_triples operators serve the metric/eval paths)
-    triples = best_to_triples(best)
-    if cfg.ground:
-        if windows is None:
-            raise ValueError("span grounding needs the windows DataFrame")
-        wtexts = windows.select("conv_id", "window_id", "window_text")
-        triples = ground_spans(
-            triples.join(wtexts, ["conv_id", "window_id"], "left")
-        )
+def link_triples(triples: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Alias-link the objects of ``cfg.link_predicates`` (broadcast join)."""
     return link_aliases(
-        triples, alias_df(spark),
+        triples, alias_df(triples.sparkSession),
         value_col="obj", out_col="obj",
         predicates=cfg.link_predicates, pred_col="pred",
     )
@@ -298,64 +231,19 @@ def run_pipeline(
     cfg: Optional[PipelineConfig] = None,
     catalog: Optional[Catalog] = None,
 ) -> DataFrame:
-    """Full pipeline; with a Catalog, every stage is a resumable snapshot."""
+    """Full pipeline; with a Catalog, every stage is a resumable snapshot
+    and the graph tables are materialized."""
     cfg = cfg or PipelineConfig()
 
+    def build_triples() -> DataFrame:
+        return link_triples(extract_triples(spark, transcripts, cfg), cfg)
+
     if catalog is None:
-        # no snapshot store: still cut lineage between stages so the
+        # no snapshot store: still cut lineage after the triples so the
         # extraction UDF runs exactly once (downstream actions + the
         # connected-components loop would otherwise recompute it)
-        windows = None
-        if cfg.ground:
-            # grounding reuses windows twice -> truncate both lineages
-            windows = build_windows(transcripts, cfg).localCheckpoint()
-            scored = run_extraction(
-                windows, extractor=cfg.extractor, model_name=cfg.model_name,
-                model_cost_ms=cfg.model_cost_ms,
-                choose_question=cfg.choose_question,
-                question_seed=cfg.question_seed,
-                tasks_per_core=cfg.model_tasks_per_core,
-            ).localCheckpoint()
-            triples = candidates_to_triples(
-                scored, cfg, spark, windows=windows
-            ).localCheckpoint()
-            return canonicalize_subjects(triples, cfg)
-        # fully fused inference stage (r7): ONE pinned exchange feeds
-        # assembly + windows + extraction + in-batch top-1 + star triples
-        # in a single Python crossing (assemble emits one row per conv, so
-        # the in-batch winner IS the global winner); alias linking is a
-        # broadcast join on the triples.  The staged operators remain the
-        # grounding/eval/catalog path.
-        triples = link_aliases(
-            extract_triples(spark, transcripts, cfg), alias_df(spark),
-            value_col="obj", out_col="obj",
-            predicates=cfg.link_predicates, pred_col="pred",
-        ).localCheckpoint()
-        return canonicalize_subjects(triples, cfg)
-
-    windows = None
-    if cfg.ground:
-        windows = catalog.stage(
-            "stage_windows", lambda: build_windows(transcripts, cfg)
-        )
-        scored = catalog.stage(
-            "stage_extract",
-            lambda: run_extraction(windows, extractor=cfg.extractor,
-                                   model_name=cfg.model_name,
-                                   model_cost_ms=cfg.model_cost_ms,
-                                   choose_question=cfg.choose_question,
-                                   question_seed=cfg.question_seed,
-                                   tasks_per_core=cfg.model_tasks_per_core),
-        )
-    else:
-        scored = catalog.stage(
-            "stage_extract",
-            lambda: extract_candidates(spark, transcripts, cfg),
-        )
-    triples = catalog.stage(
-        "stage_triples",
-        lambda: candidates_to_triples(scored, cfg, spark, windows=windows),
-    )
+        return canonicalize_subjects(build_triples().localCheckpoint(), cfg)
+    triples = catalog.stage("stage_triples", build_triples)
     final = catalog.stage(
         "stage_canonical",
         lambda: canonicalize_subjects(triples, cfg),
@@ -374,8 +262,11 @@ def materialize_graph(triples: DataFrame, catalog: Catalog,
     )
     # two-level layout: pred prunes whole predicates, subj_bucket prunes
     # within a predicate for entity-centric reads (and bounds any single
-    # output directory to ~1/buckets of a hot predicate's rows)
-    catalog.write(edges, "graph_edges",
+    # output directory to ~1/buckets of a hot predicate's rows).  Clustered
+    # on the partition columns first, so each directory gets ONE file:
+    # unclustered, every task writes a file into every directory it has
+    # rows for, and creating files dominates the write
+    catalog.write(edges.repartition("pred", "subj_bucket"), "graph_edges",
                   partition_by=["pred", "subj_bucket"])
     nodes = (
         triples.select(F.col("subj").alias("node_id"))

@@ -73,8 +73,8 @@ def stream_pipeline(
     """Streaming KG construction: closed sessions -> extraction -> triples,
     appended per micro-batch via foreachBatch.
 
-    foreachBatch reuses the *batch* operators unchanged (window assembly,
-    fused extraction, top-1, triple building, alias linking) — the
+    foreachBatch reuses the *batch* operators unchanged (the extraction
+    kernel, top-1, triple building, pipeline.link_triples) — the
     streaming layer only decides when a conversation is complete.
     Canonicalization stays a periodic batch compaction over the appended
     triples (global connected components are not a per-micro-batch
@@ -87,39 +87,48 @@ def stream_pipeline(
     pinned by the adversarial-arrival property test).
     """
     from information_extraction_t5_spark.operators.extraction import (
-        run_extraction_from_documents,
-    )
-    from information_extraction_t5_spark.operators.linking import (
-        alias_df,
-        link_aliases,
+        _model_stage_tasks,
+        run_extraction,
     )
     from information_extraction_t5_spark.operators.postprocess import (
         best_to_triples,
         top1_window,
     )
-    from information_extraction_t5_spark.pipeline import PipelineConfig
+    from information_extraction_t5_spark.pipeline import (
+        PipelineConfig,
+        link_triples,
+    )
 
     cfg = cfg or PipelineConfig()
     sessions = sessionized_conversations(stream, gap=gap,
                                          watermark=watermark)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # The model stage pins its own parallelism: AQE coalesces upstream
+        # shuffles by BYTES, which is exactly wrong before a compute-heavy
+        # UDF (a few MB of documents can carry hours of model time —
+        # observed: byte-coalescing collapsed extraction to ONE task).
+        # Round-robin with an explicit count: a bare hash repartition on
+        # conv_id is collapsed by the optimizer into the upstream session
+        # groupBy exchange, whose read AQE then byte-coalesces; round-robin
+        # survives both.
         docs = batch_df.select("conv_id", "text")
-        scored = run_extraction_from_documents(
+        docs = docs.repartition(
+            _model_stage_tasks(docs, cfg.model_tasks_per_core)
+        )
+        # per-window candidates, not in-batch triples: a micro-batch can
+        # hold two sessions of one conv, so the top-1 must be global
+        scored = run_extraction(
             docs, cfg.window, extractor=cfg.extractor,
             model_name=cfg.model_name, model_cost_ms=cfg.model_cost_ms,
             choose_question=cfg.choose_question,
-            question_seed=cfg.question_seed,
+            question_seed=cfg.question_seed, emit="scored",
         )
         best = top1_window(
             scored.select("conv_id", "qa_id", "window_id",
                           "prediction", "prob")
         )
-        triples = link_aliases(
-            best_to_triples(best), alias_df(batch_df.sparkSession),
-            value_col="obj", out_col="obj",
-            predicates=cfg.link_predicates, pred_col="pred",
-        )
+        triples = link_triples(best_to_triples(best), cfg)
         triples.write.mode("append").parquet(out_path)
 
     writer = (

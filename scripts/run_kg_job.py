@@ -54,8 +54,8 @@ def main():
         "triples_per_sec": round(n / wall, 2),
         "stages": {
             name: catalog.lineage(name)
-            for name in ("stage_extract", "stage_triples",
-                         "stage_canonical", "graph_edges", "graph_nodes")
+            for name in ("stage_triples", "stage_canonical",
+                         "graph_edges", "graph_nodes")
             if catalog.exists(name)
         },
     }

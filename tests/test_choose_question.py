@@ -5,6 +5,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from information_extraction_t5_spark.core.registry import DEFAULT_PREDICATES
+from information_extraction_t5_spark.core.windows import WindowSpec
 from information_extraction_t5_spark.operators.extraction import (
     _variant_indices,
     expand_questions,
@@ -16,15 +17,26 @@ N_PREDICATES = len(DEFAULT_PREDICATES)
 N_VARIANTS = sum(len(p.questions) for p in DEFAULT_PREDICATES)
 
 
+TEXTS = [
+    ("c1", "Nome Completo Ana Souza\nBairro Centro"),
+    ("c2", "Data de Emissão 01/02/2020"),
+]
+# budget far above the texts: each document is exactly one window
+SPEC = WindowSpec(max_size=700, window_overlap=0.2, max_windows=6,
+                  question="Qual?", use_sentence_id=False)
+
+
 def _windows(spark):
     return spark.createDataFrame(
-        [
-            ("c1", 0, 0, "Nome Completo Ana Souza\nBairro Centro"),
-            ("c2", 0, 0, "Data de Emissão 01/02/2020"),
-        ],
+        [(cid, 0, 0, text) for cid, text in TEXTS],
         "conv_id string, window_id int, window_offset int, "
         "window_text string",
     )
+
+
+def _scored(spark, **kw):
+    docs = spark.createDataFrame(TEXTS, "conv_id string, text string")
+    return run_extraction(docs, SPEC, emit="scored", **kw)
 
 
 def _frame(df) -> pd.DataFrame:
@@ -36,16 +48,14 @@ def _frame(df) -> pd.DataFrame:
 
 
 def test_first_is_default_and_unchanged(spark):
-    w = _windows(spark)
-    base = _frame(run_extraction(w))
-    first = _frame(run_extraction(w, choose_question="first"))
+    base = _frame(_scored(spark))
+    first = _frame(_scored(spark, choose_question="first"))
     pd.testing.assert_frame_equal(base, first)
     assert len(base) == 2 * N_PREDICATES
 
 
 def test_all_multiplies_by_variant_count(spark):
-    w = _windows(spark)
-    out = run_extraction(w, choose_question="all")
+    out = _scored(spark, choose_question="all")
     counts = {
         r["qa_id"]: r["n"]
         for r in out.groupBy("qa_id")
@@ -58,12 +68,11 @@ def test_all_multiplies_by_variant_count(spark):
 
 
 def test_random_is_deterministic_and_row_parity_with_first(spark):
-    w = _windows(spark)
-    a = _frame(run_extraction(w, choose_question="random", question_seed=13))
-    b = _frame(run_extraction(w, choose_question="random", question_seed=13))
+    a = _frame(_scored(spark, choose_question="random", question_seed=13))
+    b = _frame(_scored(spark, choose_question="random", question_seed=13))
     pd.testing.assert_frame_equal(a, b)
     # the regex model is question-invariant: 'random' == 'first' row-for-row
-    first = _frame(run_extraction(w))
+    first = _frame(_scored(spark))
     pd.testing.assert_frame_equal(a, first)
 
 

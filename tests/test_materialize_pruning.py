@@ -1,4 +1,5 @@
 """Graph materialization: predicate partitioning must prune at read time."""
+import glob
 import io
 import sys
 
@@ -43,6 +44,12 @@ def test_edges_partition_pruning(spark, tmp_path):
     assert "subj_bucket" in edges.columns
     n_buckets = edges.select("subj_bucket").distinct().count()
     assert 1 <= n_buckets <= PipelineConfig().subj_buckets
+
+    # the write is clustered on the layout: one file per leaf directory
+    leaves = glob.glob(f"{tmp_path}/wh/graph_edges/pred=*/subj_bucket=*")
+    assert leaves
+    for leaf in leaves:
+        assert len(glob.glob(f"{leaf}/*.parquet")) == 1, leaf
 
 
 def test_edges_subj_bucket_pruning(spark, tmp_path):

@@ -1,4 +1,6 @@
 """End-to-end pipeline: golden P/R, invariants, canonicalization, resume."""
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,21 +82,89 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     t = synth.transcripts_df(spark, 6)
     first = run_pipeline(spark, t, catalog=cat)
     n1 = first.count()
-    assert cat.exists("stage_extract") and cat.exists("stage_canonical")
+    assert cat.exists("stage_triples") and cat.exists("stage_canonical")
     assert cat.lineage("stage_triples")["rows"] > 0
 
     # poison pill: resume must NOT recompute extraction
     import information_extraction_t5_spark.pipeline as pl
 
-    orig = pl.extract_candidates
-    pl.extract_candidates = lambda *a, **k: (_ for _ in ()).throw(
+    orig = pl.extract_triples
+    pl.extract_triples = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("extraction recomputed on resume")
     )
     try:
         again = run_pipeline(spark, t, catalog=cat)
         assert again.count() == n1
     finally:
-        pl.extract_candidates = orig
+        pl.extract_triples = orig
+
+
+def _sorted_rows(df, cols):
+    # repr key: NULL obj_raw / span columns must not be compared to str
+    return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+
+def test_catalog_run_matches_plain_run(spark, tmp_path):
+    """The catalog path runs the same composition as the plain path and
+    commits only the triples, canonical and graph tables."""
+    wh = tmp_path / "wh"
+    t = synth.transcripts_df(spark, N)
+    plain = run_pipeline(spark, t)
+    staged = run_pipeline(spark, t, catalog=Catalog(spark, str(wh)))
+    cols = sorted(plain.columns)
+    assert sorted(staged.columns) == cols
+    assert _sorted_rows(staged, cols) == _sorted_rows(plain, cols)
+    committed = {d for d in os.listdir(wh)
+                 if os.path.exists(wh / d / "_lineage.json")}
+    assert committed == {"stage_triples", "stage_canonical",
+                         "graph_edges", "graph_nodes"}
+
+
+def test_inline_grounding_matches_staged_reference(spark):
+    """ground=True grounds inside the extraction kernel; it must equal the
+    staged route built here: per-window candidates -> top1_window ->
+    best_to_triples -> join window text -> ground_spans -> alias link ->
+    canonicalize."""
+    from information_extraction_t5_spark.operators.extraction import (
+        run_extraction,
+    )
+    from information_extraction_t5_spark.operators.postprocess import (
+        SPAN_SCHEMA,
+        best_to_triples,
+        ground_spans,
+        top1_window,
+    )
+    from information_extraction_t5_spark.operators.windows import (
+        assemble_documents,
+        sliding_windows_exact,
+    )
+    from information_extraction_t5_spark.pipeline import (
+        canonicalize_subjects,
+        link_triples,
+    )
+
+    cfg = PipelineConfig(ground=True)
+    t = synth.transcripts_df(spark, N)
+    docs = assemble_documents(t).localCheckpoint()
+    best = top1_window(
+        run_extraction(docs, cfg.window, emit="scored")
+        .select("conv_id", "qa_id", "window_id", "prediction", "prob")
+    )
+    texts = sliding_windows_exact(docs, cfg.window).select(
+        "conv_id", "window_id", "window_text"
+    )
+    spans = ground_spans(
+        best_to_triples(best).join(texts, ["conv_id", "window_id"], "left")
+    )
+    reference = canonicalize_subjects(
+        link_triples(spans, cfg).localCheckpoint(), cfg
+    )
+
+    cols = [c.split()[0] for c in SPAN_SCHEMA.split(", ")] + ["subj"]
+    got = _sorted_rows(run_pipeline(spark, t, cfg), cols)
+    want = _sorted_rows(reference, cols)
+    assert got == want
+    assert any(r[cols.index("span_start")] is not None for r in got)
 
 
 def test_empty_input(spark):

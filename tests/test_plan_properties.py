@@ -1,8 +1,11 @@
 """Physical-plan regression guards: the perf-critical plan properties
 verified in docs/PLANS.md must not silently regress."""
 import io
+import re
 import sys
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from information_extraction_t5_spark.operators.linking import (
@@ -17,6 +20,11 @@ def _plan(df) -> str:
     df.explain("formatted")
     sys.stdout = old
     return buf.getvalue()
+
+
+def _nodes(plan: str) -> Counter:
+    """Operator names from the numbered details of a formatted plan."""
+    return Counter(re.findall(r"^\(\d+\) (\w+)", plan, re.MULTILINE))
 
 
 def test_alias_link_is_broadcast_hash_join(spark):
@@ -95,12 +103,12 @@ def test_model_stage_parallelism_survives_aqe(spark):
     from information_extraction_t5_spark.data import synth
     from information_extraction_t5_spark.pipeline import (
         PipelineConfig,
-        extract_candidates,
+        extract_triples,
     )
 
     cfg = PipelineConfig()
     transcripts = synth.transcripts_df(spark, 40)
-    scored = extract_candidates(spark, transcripts, cfg)
+    scored = extract_triples(spark, transcripts, cfg)
 
     plan = _plan(scored)
     # exactly one exchange, user-pinned so AQE cannot byte-coalesce it
@@ -118,6 +126,50 @@ def test_model_stage_parallelism_survives_aqe(spark):
         f"model stage ran in {n_parts} partitions; byte-coalescing "
         f"collapse regressed (want >= {want})"
     )
+
+
+class _Staged(Exception):
+    pass
+
+
+@pytest.mark.parametrize("ground", [False, True])
+def test_stage_triples_plan_is_one_exchange_one_python_stage(
+        spark, tmp_path, ground):
+    """The catalog path stages exactly the fused plan: one pinned shuffle,
+    one extraction mapInPandas (spans too when grounding), no top-1
+    Window; alias linking adds only a broadcast join."""
+    from information_extraction_t5_spark.catalog import Catalog
+    from information_extraction_t5_spark.data import synth
+    from information_extraction_t5_spark.pipeline import (
+        PipelineConfig,
+        extract_triples,
+        run_pipeline,
+    )
+
+    cfg = PipelineConfig(ground=ground)
+    transcripts = synth.transcripts_df(spark, 6).localCheckpoint()
+    plans = {}
+
+    def stage(name, build, **_kw):
+        plans[name] = _plan(build())
+        raise _Staged  # the first stage's plan is all this test needs
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.stage = stage
+    with pytest.raises(_Staged):
+        run_pipeline(spark, transcripts, cfg, catalog=cat)
+    assert list(plans) == ["stage_triples"]
+
+    staged = _nodes(plans["stage_triples"])
+    assert staged["Exchange"] == 1
+    assert "REPARTITION_BY_NUM" in plans["stage_triples"]
+    assert staged["MapInPandas"] == 1
+    assert "Window" not in staged
+    added = staged - _nodes(_plan(extract_triples(spark, transcripts, cfg)))
+    assert added["BroadcastExchange"] == 1
+    assert added["BroadcastHashJoin"] == 1
+    assert set(added) <= {"BroadcastExchange", "BroadcastHashJoin",
+                          "Project", "Filter", "Scan"}, added
 
 
 def test_squad_conversion_plan_is_broadcast_and_python_free(spark):

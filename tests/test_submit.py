@@ -27,7 +27,7 @@ def test_spark_submit_smoke_and_resume(tmp_path):
 
     first = submit()
     assert first.returncode == 0, first.stderr[-2000:]
-    for stage in ("stage_extract", "stage_triples", "stage_canonical",
+    for stage in ("stage_triples", "stage_canonical",
                   "graph_edges", "graph_nodes"):
         lineage = os.path.join(wh, stage, "_lineage.json")
         assert os.path.exists(lineage), stage

@@ -1,9 +1,10 @@
-"""top1 pre-reduction (r7): per-batch argmin must not change the winner.
+"""In-batch top-1 (r7): the extraction kernel's 'triples' mode must pick
+the same winners as per-window 'scored' rows fed through top1_window.
 
-The fused extraction can reduce each batch to the per-(conv_id, qa_id)
-winner under top1_window's use_fewer_na ordering; argmin associativity
-makes the downstream global top-1 identical.  Pin that end to end and at
-the kernel level.
+top1_prereduce_pdf reduces each batch to the per-(conv_id, qa_id) winner
+under top1_window's use_fewer_na ordering; with one document row per conv
+the batch winner is the global winner.  Pin that end to end and at the
+kernel level.
 """
 from __future__ import annotations
 
@@ -11,36 +12,13 @@ import pandas as pd
 
 from information_extraction_t5_spark.core.windows import WindowSpec
 from information_extraction_t5_spark.operators.extraction import (
-    run_extraction_from_documents,
+    run_extraction,
     top1_prereduce_pdf,
 )
 from information_extraction_t5_spark.operators.postprocess import top1_window
 from information_extraction_t5_spark.operators.windows import (
     assemble_documents,
 )
-
-
-def _rows(df):
-    return sorted(
-        tuple(r) for r in
-        df.select("conv_id", "qa_id", "window_id",
-                  "prediction", "prob").collect()
-    )
-
-
-def test_prereduce_preserves_top1_winners(spark):
-    from information_extraction_t5_spark.data import synth
-
-    docs = assemble_documents(synth.transcripts_df(spark, 60))
-    spec = WindowSpec(max_size=700, window_overlap=0.2, max_windows=6,
-                      question="Qual o endereço?", use_sentence_id=True)
-    full = run_extraction_from_documents(docs, spec)
-    red = run_extraction_from_documents(docs, spec, prereduce_top1=True)
-
-    assert red.count() < full.count()  # the reduction actually fires
-    slim = ["conv_id", "qa_id", "window_id", "prediction", "prob"]
-    assert _rows(top1_window(full.select(*slim))) == \
-        _rows(top1_window(red.select(*slim)))
 
 
 def test_prereduce_kernel_ordering():
@@ -65,12 +43,9 @@ def test_prereduce_kernel_ordering():
 
 
 def test_fused_triples_match_staged(spark):
-    """run_extraction_to_triples (one Python crossing) must equal the
-    staged extraction -> top1_window -> best_to_triples route."""
+    """emit='triples' (one Python crossing) must equal the staged
+    emit='scored' -> top1_window -> best_to_triples route."""
     from information_extraction_t5_spark.data import synth
-    from information_extraction_t5_spark.operators.extraction import (
-        run_extraction_to_triples,
-    )
     from information_extraction_t5_spark.operators.postprocess import (
         best_to_triples,
     )
@@ -78,11 +53,11 @@ def test_fused_triples_match_staged(spark):
     docs = assemble_documents(synth.transcripts_df(spark, 80))
     spec = WindowSpec(max_size=700, window_overlap=0.2, max_windows=6,
                       question="Qual o endereço?", use_sentence_id=True)
+    scored = run_extraction(docs, spec, emit="scored")
     staged = best_to_triples(top1_window(
-        run_extraction_from_documents(docs, spec)
-        .select("conv_id", "qa_id", "window_id", "prediction", "prob")
+        scored.select("conv_id", "qa_id", "window_id", "prediction", "prob")
     ))
-    fused = run_extraction_to_triples(docs, spec)
+    fused = run_extraction(docs, spec, emit="triples")
     cols = ["conv_id", "pred", "obj", "obj_raw", "window_id", "prob",
             "sent_id"]
     a = sorted(tuple(r) for r in staged.select(*cols).collect())
