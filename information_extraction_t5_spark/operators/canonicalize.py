@@ -1,80 +1,22 @@
 """Canonicalization: connected components over mention-similarity edges.
 
-Union-find expressed as iterative DataFrame joins (alternating large-star /
-small-star style min-label propagation) — converges in O(log n) rounds on
-real graphs, deterministic canonical id = min member id.  No GraphFrames
-dependency; lineage is truncated every round with localCheckpoint so plans
-don't snowball.  (SURVEY.md §4: custom logic, not a Catalyst rule.)
+One algorithm, two executions of it: the alternating large-star /
+small-star contraction (Kiveris et al., "Connected Components in MapReduce
+and Beyond") converges in O(log n) rounds on any graph shape, and a
+driver-side union-find labels small graphs in one collect.  Both give the
+deterministic canonical id = min member id.  No GraphFrames dependency;
+each distributed round ends in one localCheckpoint so plans don't
+snowball.  (SURVEY.md §4: custom logic, not a Catalyst rule.)
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import logging
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """(node, component) with component = min node id in the component.
-
-    ``edges`` is undirected input (string ids).  Algorithm: keep a label per
-    node (init = own id); each round every node adopts the min label in its
-    closed neighborhood; stop when no label changes.
-    """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        # the edge set is re-joined every round: cut its lineage once so
-        # upstream stages (extraction!) are never recomputed per iteration
-        .localCheckpoint(eager=True)
-    )
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node"))
-
-    for _ in range(max_iter):
-        # neighbor labels: node <- min(label[b]) over edges (a=node, b)
-        neighbor_min = (
-            sym.join(labels.withColumnRenamed("node", "b"), on="b")
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        updated = (
-            labels.join(neighbor_min, on="node", how="left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_component"), F.col("component")),
-                ).alias("component"),
-                (F.coalesce(F.col("nbr_component"), F.col("component"))
-                 < F.col("component")).alias("_changed"),
-            )
-        )
-        updated = updated.localCheckpoint(eager=True)
-        changed = updated.filter(F.col("_changed")).limit(1).count()
-        labels = updated.drop("_changed")
-        if changed == 0:
-            break
-
-    return labels
-
-
-def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    return (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(
-            F.col("a").isNotNull() & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-    )
+_LOG = logging.getLogger(__name__)
 
 
 def _driver_union_find(pairs) -> list:
@@ -102,6 +44,50 @@ def _driver_union_find(pairs) -> list:
     return [(n, find(n)) for n in parent]
 
 
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """Symmetric, distinct ``(a, b)`` rows of undirected edges without
+    NULLs or self-loops, hash-partitioned on ``a`` by ONE exchange: the
+    distinct and any window on ``a`` reuse that partitioning."""
+    a, b = F.col("a"), F.col("b")
+    return (
+        edges.filter(a.isNotNull() & b.isNotNull() & (a != b))
+        .select(F.explode(F.array(
+            F.struct(a.alias("a"), b.alias("b")),
+            F.struct(b.alias("a"), a.alias("b")),
+        )).alias("e"))
+        .select("e.a", "e.b")
+        .repartition("a")
+        .distinct()
+    )
+
+
+def _star_state(edges: DataFrame):
+    """Checkpointed contraction state and its two star-forest counters.
+
+    Rows are ``_adjacency(edges)`` plus ``nb`` = min neighbour of ``a`` and
+    ``m`` = min of its closed neighbourhood, computed before the checkpoint
+    drops the partitioning.  Counters, observed on the checkpoint's job:
+    ``large`` = rows where a non-root has a bigger neighbour (b > a,
+    m < a); ``small`` = rows where a node has a second smaller neighbour
+    (b < a, b != m).  Both are 0 exactly on a star forest centred on each
+    component's min node.
+    """
+    a, b, m = F.col("a"), F.col("b"), F.col("m")
+    obs = Observation()
+    state = (
+        _adjacency(edges)
+        .withColumn("nb", F.min("b").over(Window.partitionBy("a")))
+        .withColumn("m", F.least(F.col("nb"), a))
+        .observe(
+            obs,
+            F.count(F.when((b > a) & (m < a), True)).alias("large"),
+            F.count(F.when((b < a) & (b != m), True)).alias("small"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    return state, obs.get
+
+
 DEFAULT_DRIVER_THRESHOLD = 1_000_000
 
 
@@ -109,46 +95,40 @@ def connected_components_star(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
+    max_iter: int = 64,
     driver_threshold: int = DEFAULT_DRIVER_THRESHOLD,
 ) -> DataFrame:
     """(node, component) via alternating large-star / small-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond").
 
-    Converges in O(log n) rounds on ANY graph shape — min-label
-    propagation needs O(diameter) rounds, which a long mention chain can
-    make linear.  Deterministic: component id = min node id.
+    O(log n) rounds on ANY graph shape (min-label propagation needs
+    O(diameter), which a long mention chain makes linear).  Deterministic:
+    component id = min node id.
 
       large-star: every neighbor v > u re-points to min(N(u) + {u})
       small-star: every neighbor v <= u re-points to that minimum
 
-    Small-graph fast path: each distributed round costs a handful of
-    blocking jobs (localCheckpoint + convergence checksum) regardless of
-    data size — on a mention graph of a few hundred thousand edges that
-    fixed latency dominates.  When the UNDIRECTED input edge list is under
-    ``driver_threshold`` rows, a driver-side union-find computes the
-    identical labels in one collect + one parallelize (same min-id
-    semantics; pinned by test_canonicalize_star parity tests).  The
-    distributed contraction is the 10^12-scale path; set
-    ``driver_threshold=0`` to force it.
+    A round is one lazy plan with two hash exchanges on ``a``, written by
+    ONE eager localCheckpoint whose observed counters (``_star_state``)
+    decide convergence exactly: an input that already is a star forest
+    runs no round.  Running out of ``max_iter`` raises ``RuntimeError``
+    instead of returning wrong labels (64 is above the ~35 rounds
+    docs/PLANS.md estimates at 6·10^10 nodes).  The labels are a narrow
+    filter over the last checkpoint: each node has exactly one row with
+    b == nb, and on a star forest its ``m`` is the component's min id.
+    Each call logs one INFO line: the path, and the rounds and counters.
 
-    r7: the gate counts the raw (null/self filtered) input edge rows — it
-    no longer pays the symmetrize-union + distinct shuffle before probing
-    (the union-find neither needs both directions nor dedup, so the
-    collect is half the bytes for the same graph), and the probe is a
-    count over a lazily-checkpointed edge frame followed by a cache-read
-    collect.  On the distributed fallback that same cached frame feeds the
-    symmetrization, so the count job replaces the eager checkpoint the old
-    path paid anyway — no extra pass at 10^12 scale.
-
-    Driver-memory sizing: the fast path collects up to ``driver_threshold``
-    (a, b) string tuples plus the union-find dict — roughly 150-250 bytes
-    per edge of Python overhead, so the 1M default costs ~200 MB against
-    the 20g driver the session factory configures (scale
-    ``driver_threshold`` down with driver memory; plumbed through
-    ``PipelineConfig.cc_driver_threshold`` so deployments size it without
-    code changes).  Past ~1M edges the collect itself costs seconds and
-    the distributed contraction wins regardless of memory.
+    Small-graph fast path: a distributed round costs a few blocking jobs
+    whatever the data size, so when the raw (null/self filtered) input
+    edge list is under ``driver_threshold`` rows, a driver-side union-find
+    computes the identical labels from one count + one cache-read collect
+    (parity pinned by test_canonicalize_star).  ``driver_threshold=0``
+    forces the distributed contraction, the 10^12-scale path.  Driver
+    memory: ~150-250 bytes of Python per collected edge, so the 1M default
+    costs ~200 MB of the 20g driver the session factory configures; size
+    it down with driver memory via ``PipelineConfig.cc_driver_threshold``.
+    Past ~1M edges the collect itself costs seconds and the distributed
+    contraction wins regardless of memory.
     """
     flat = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -157,12 +137,13 @@ def connected_components_star(
             & (F.col("a") != F.col("b"))
         )
         # computed once: the probe count materializes it, the driver-path
-        # collect and the distributed symmetrization read the cache
+        # collect and the first distributed state read the cache
         .localCheckpoint(eager=False)
     )
 
     if driver_threshold > 0 and flat.count() <= driver_threshold:
         probe = flat.collect()
+        _LOG.info("connected components: path=driver edges=%d", len(probe))
         # schema mirrors the distributed path: node/component keep the
         # edge columns' type (string ids in practice, but not assumed)
         node_type = flat.schema["a"].dataType
@@ -177,64 +158,39 @@ def connected_components_star(
         # here the row count is known and bounded by 2 x driver_threshold,
         # so mark it broadcastable (r7)
         return F.broadcast(out)
-    e = _symmetric(flat, "a", "b").localCheckpoint(eager=True)
-    nodes = e.select(F.col("a").alias("node")).distinct() \
-        .localCheckpoint(eager=True)
 
-    def checksum(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).head()
-        return (row["n"], row["h"])
-
-    prev = None
-    for _ in range(max_iter):
-        # large-star
-        nbr = e  # symmetric adjacency: rows (a, b) mean b in N(a)
-        m = nbr.groupBy("a").agg(
-            F.least(F.min("b"), F.first("a")).alias("m")
+    a, b = F.col("a"), F.col("b")
+    state, seen = _star_state(flat)
+    rounds = 0
+    while (seen["large"] or seen["small"]) and rounds < max_iter:
+        # large-star: every neighbour b > a re-points to m(a); exchange 1
+        # symmetrizes and dedups, keyed on a for the small-star window
+        large = _adjacency(
+            state.filter(b > a).select(b.alias("a"), F.col("m").alias("b"))
         )
-        large = (
-            nbr.join(m, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("x"), F.col("m").alias("y"))
-        )
-        e = _symmetric(large, "x", "y").localCheckpoint(eager=True)
-
-        # small-star over neighbors <= u
-        small_adj = e.filter(F.col("b") <= F.col("a"))
-        ms = small_adj.groupBy("a").agg(
-            F.least(F.min("b"), F.first("a")).alias("m")
-        )
+        # small-star: a and every neighbour b < a re-point to ms, the min
+        # of those neighbours (ms < a on every row, so least(ms, a) = ms);
+        # the row with b == ms carries a's own edge
+        ms = F.min("b").over(Window.partitionBy("a"))
         small = (
-            small_adj.join(ms, "a")
-            .select(F.col("b").alias("x"), F.col("m").alias("y"))
-            .union(ms.select(F.col("a").alias("x"), F.col("m").alias("y")))
-            .filter(F.col("x") != F.col("y"))
+            large.filter(b < a).withColumn("ms", ms)
+            .select(F.when(b == F.col("ms"), a).otherwise(b).alias("a"),
+                    F.col("ms").alias("b"))
         )
-        e = _symmetric(small, "x", "y").localCheckpoint(eager=True)
-
-        cur = checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-
-    # after convergence every non-root points directly at its root
-    labels = (
-        e.filter(F.col("b") < F.col("a"))
-        .groupBy(F.col("a").alias("node"))
-        .agg(F.min("b").alias("component"))
+        state, seen = _star_state(small)  # exchange 2 + the checkpoint
+        rounds += 1
+    _LOG.info(
+        "connected components: path=distributed rounds=%d large=%d small=%d",
+        rounds, seen["large"], seen["small"],
     )
-    return (
-        nodes.join(labels, "node", "left")
-        .select(
-            "node",
-            F.coalesce("component", F.col("node")).alias("component"),
+    if seen["large"] or seen["small"]:
+        raise RuntimeError(
+            f"connected_components_star did not converge in max_iter="
+            f"{max_iter} rounds: large={seen['large']}, "
+            f"small={seen['small']} rows still off a star forest"
         )
+    return state.filter(b == F.col("nb")).select(
+        a.alias("node"), F.col("m").alias("component")
     )
 
 
@@ -279,7 +235,7 @@ def canonical_entities(
     # NULL keys are dropped explicitly (the old equi-join could never
     # match them, so they produced no edges); duplicate (mention, key)
     # rows emit duplicate edges — union-find is insensitive, the
-    # distributed path dedups inside _symmetric, and the driver-path
+    # distributed path dedups inside _adjacency, and the driver-path
     # threshold count stays conservative (over-counts only).  The window
     # buffers each key group in a spillable buffer, so a hot key stays
     # memory-safe — same bound as the old groupBy.  NULL mentions are

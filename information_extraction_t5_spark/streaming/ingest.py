@@ -85,6 +85,10 @@ def stream_pipeline(
     equality contract only holds for arrival schedules within it; a turn
     later than the watermark is dropped by design (late-data semantics,
     pinned by the adversarial-arrival property test).
+
+    ``cfg.ground`` is rejected with ``ValueError`` before the query
+    starts: the micro-batch body emits plain triples, and span grounding
+    needs the winning window's text, which ``emit="scored"`` drops.
     """
     from information_extraction_t5_spark.operators.extraction import (
         _model_stage_tasks,
@@ -100,6 +104,11 @@ def stream_pipeline(
     )
 
     cfg = cfg or PipelineConfig()
+    if cfg.ground:
+        raise ValueError(
+            "stream_pipeline does not ground spans: PipelineConfig(ground="
+            "True) would append triples without span columns"
+        )
     sessions = sessionized_conversations(stream, gap=gap,
                                          watermark=watermark)
 

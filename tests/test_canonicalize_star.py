@@ -1,12 +1,13 @@
-"""Star-contraction connected components vs union-find ground truth and
-vs the min-label implementation."""
+"""Star-contraction connected components: the distributed contraction and
+the driver union-find fast path vs union-find ground truth."""
+import logging
 import random
 
 import pytest
 
+from information_extraction_t5_spark.operators import canonicalize
 from information_extraction_t5_spark.operators.canonicalize import (
     canonical_entities,
-    connected_components,
     connected_components_star,
 )
 
@@ -36,6 +37,11 @@ def _truth(edges_py):
     return out
 
 
+def _labels(df, **kw):
+    return {r["node"]: r["component"]
+            for r in connected_components_star(df, **kw).collect()}
+
+
 @pytest.mark.parametrize("case", ["path", "random", "mix"])
 def test_star_cc_matches_union_find(spark, case):
     if case == "path":
@@ -51,9 +57,7 @@ def test_star_cc_matches_union_find(spark, case):
         edges = [("a", "hub"), ("b", "hub"), ("c", "hub"),
                  ("x1", "x2"), ("x2", "x3"), ("x3", "x4"), ("q", "z")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: r["component"]
-           for r in connected_components_star(df).collect()}
-    assert got == _truth(edges)
+    assert _labels(df) == _truth(edges)
 
 
 def test_distributed_star_moderate_scale(spark):
@@ -71,23 +75,63 @@ def test_distributed_star_moderate_scale(spark):
     ]
     edges = [e for e in edges if e[0] != e[1]]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        row["node"]: row["component"]
-        for row in connected_components_star(
-            df, driver_threshold=0
-        ).collect()
-    }
-    assert got == _truth(edges)
+    assert _labels(df, driver_threshold=0) == _truth(edges)
 
 
-def test_star_and_minlabel_agree_on_shallow_graph(spark):
+def test_driver_and_distributed_agree_on_shallow_graph(spark):
     edges = [("m1", "m2"), ("m2", "m3"), ("x", "y")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    a = {r["node"]: r["component"]
-         for r in connected_components_star(df).collect()}
-    b = {r["node"]: r["component"]
-         for r in connected_components(df).collect()}
-    assert a == b == _truth(edges)
+    assert _labels(df) == _labels(df, driver_threshold=0) == _truth(edges)
+
+
+def test_running_out_of_rounds_raises(spark):
+    """A 2,000-node path with shuffled ids needs ~9 contraction rounds:
+    stopping earlier must raise, never return the partial labels."""
+    ids = list(range(2000))
+    random.Random(7).shuffle(ids)
+    edges = [(f"p{x:05d}", f"p{y:05d}") for x, y in zip(ids, ids[1:])]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    for max_iter in (1, 2, 3):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components_star(df, driver_threshold=0,
+                                      max_iter=max_iter)
+    assert _labels(df, driver_threshold=0) == _truth(edges)
+
+
+@pytest.mark.parametrize("hub, rounds", [("a0", 0), ("z9", 1)])
+def test_star_shaped_input_rounds(spark, caplog, hub, rounds):
+    """A star centred on its min node (plus an isolated pair) already is a
+    star forest: both counters are 0 and no round runs.  Centred on its
+    max node it is not (only the ``small`` counter sees it): one round."""
+    edges = [(hub, f"b{i}") for i in range(5)] + [("x", "y")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    caplog.set_level(logging.INFO, logger=canonicalize.__name__)
+    assert _labels(df, driver_threshold=0) == _truth(edges)
+    assert f"path=distributed rounds={rounds} large=0 small=0" in caplog.text
+
+
+def test_distributed_labels_are_a_filter_over_the_checkpoint(spark):
+    """The labels read the last round's checkpoint through a narrow
+    filter: no node frame, aggregate, join or exchange after it."""
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(30)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    out = connected_components_star(df, driver_threshold=0)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan
+    for op in ("Exchange", "Join", "Aggregate", "Window"):
+        assert op not in plan, plan
+
+
+def test_duplicate_and_reversed_edges(spark):
+    """Duplicate rows and both directions of every edge change no label on
+    either path."""
+    r = random.Random(3)
+    edges = [(f"v{r.randint(0, 59):02d}", f"v{r.randint(0, 59):02d}")
+             for _ in range(50)]
+    edges = [e for e in edges if e[0] != e[1]]
+    noisy = edges + [(b, a) for a, b in edges] + edges[:20]
+    df = spark.createDataFrame(noisy, "src string, dst string")
+    assert _labels(df) == _labels(df, driver_threshold=0) == _truth(edges)
 
 
 def test_canonical_entities_null_keys_and_duplicates(spark):
@@ -145,12 +189,7 @@ def test_driver_fast_path_matches_distributed(spark, case):
         ]
         edges = [e for e in edges if e[0] != e[1]]
     df = spark.createDataFrame(edges, "src string, dst string")
-    fast = {r["node"]: r["component"]
-            for r in connected_components_star(df).collect()}
-    dist = {r["node"]: r["component"]
-            for r in connected_components_star(
-                df, driver_threshold=0).collect()}
-    assert fast == dist == _truth(edges)
+    assert _labels(df) == _labels(df, driver_threshold=0) == _truth(edges)
 
 
 def test_config_threshold_zero_forces_distributed_path(spark, monkeypatch):

@@ -16,7 +16,7 @@ from information_extraction_t5_spark.operators import multimodal as mm
 from information_extraction_t5_spark.operators.balance import balance
 from information_extraction_t5_spark.operators.canonicalize import (
     canonical_entities,
-    connected_components,
+    connected_components_star,
 )
 from information_extraction_t5_spark.operators.linking import (
     alias_df,
@@ -169,7 +169,8 @@ def test_connected_components_and_entities(spark):
         [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
     )
     comp = {r["node"]: r["component"]
-            for r in connected_components(edges).collect()}
+            for r in connected_components_star(
+                edges, driver_threshold=0).collect()}
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["x"] == comp["y"] == "x"
 

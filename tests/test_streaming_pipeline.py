@@ -4,6 +4,7 @@ import datetime as dt
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from information_extraction_t5_spark.data import synth
@@ -69,6 +70,22 @@ def test_stream_pipeline_emits_closed_sessions(spark, tmp_path):
         if r["conv_id"] != "zz_sentinel"
     }
     assert batch_set == stream_set
+
+
+def test_stream_pipeline_rejects_grounding(spark, tmp_path):
+    """ground=True must raise before a query starts, not append triples
+    without span columns."""
+    from information_extraction_t5_spark.pipeline import PipelineConfig
+
+    stream = spark.readStream.schema(synth.TRANSCRIPTS_SCHEMA).parquet(
+        str(tmp_path))
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="ground"):
+        stream_pipeline(spark, stream, str(tmp_path / "out"),
+                        str(tmp_path / "ckpt"),
+                        cfg=PipelineConfig(ground=True))
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(tmp_path / "ckpt")
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@ bench scale rather than unit scale.  Results land in BENCH/notes_r6.md.
 
 Usage: python tools/soak_distributed_cc.py [cpus] [convs]
 """
+import logging
 import os
 import sys
 import time
@@ -29,15 +30,14 @@ def main():
     spark = get_spark("cc-soak", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # count star-contraction rounds via the checksum loop's checkpoint
-    rounds = {"n": 0}
-    orig = canonicalize._symmetric
-
-    def counting_symmetric(*a, **kw):
-        rounds["n"] += 1
-        return orig(*a, **kw)
-
-    canonicalize._symmetric = counting_symmetric
+    # connected_components_star logs one line per call: the path taken
+    # and, distributed, the contraction rounds and last counters
+    cc_log = []
+    handler = logging.Handler(logging.INFO)
+    handler.emit = lambda record: cc_log.append(record.getMessage())
+    logger = logging.getLogger(canonicalize.__name__)
+    logger.addHandler(handler)
+    logger.setLevel(logging.INFO)
 
     cfg_fuzzy = PipelineConfig(fuzzy_hash="xxhash64", cc_driver_threshold=0,
                                model_tasks_per_core=2)
@@ -49,24 +49,23 @@ def main():
         spark, convs, partitions=max(4 * cpus, 16)
     ).localCheckpoint(eager=True)
 
-    rounds["n"] = 0
+    cc_log.clear()
     t0 = time.time()
     n = run_pipeline(spark, transcripts, cfg_fuzzy).count()
     wall = time.time() - t0
-    # _symmetric is called once up front + once per contraction round
     print(f"distributed-CC soak: convs={convs} cpus={cpus} "
-          f"triples={n} wall={wall:.2f}s "
-          f"symmetric_calls={rounds['n']}")
+          f"triples={n} wall={wall:.2f}s cc: {'; '.join(cc_log)}")
 
     # driver-path comparison run (default threshold) for the notes
-    rounds["n"] = 0
+    cc_log.clear()
     t0 = time.time()
     n2 = run_pipeline(spark, transcripts,
                       PipelineConfig(fuzzy_hash="xxhash64",
                                      model_tasks_per_core=2)).count()
     wall2 = time.time() - t0
     assert n == n2, f"distributed vs driver CC rows differ: {n} != {n2}"
-    print(f"driver-CC comparison:  wall={wall2:.2f}s (same {n2} triples)")
+    print(f"driver-CC comparison:  wall={wall2:.2f}s (same {n2} triples) "
+          f"cc: {'; '.join(cc_log)}")
 
 
 if __name__ == "__main__":
