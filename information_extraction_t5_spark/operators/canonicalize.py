@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -152,11 +153,13 @@ def connected_components_star(
             T.StructField("component", node_type, False),
         ])
         labels = _driver_union_find([(r["a"], r["b"]) for r in probe])
-        out = flat.sparkSession.createDataFrame(labels, schema)
-        # createDataFrame yields an RDD-backed frame with UNKNOWN size
-        # stats (Catalyst assumes huge -> downstream joins go sort-merge);
-        # here the row count is known and bounded by 2 x driver_threshold,
-        # so mark it broadcastable (r7)
+        # through Arrow: a local relation, where a Python list would be
+        # pickled through a Python-worker task inside the consuming join
+        table = pa.table({"node": [n for n, _ in labels],
+                          "component": [c for _, c in labels]})
+        out = flat.sparkSession.createDataFrame(table, schema)
+        # the row count is bounded by 2 x driver_threshold: keep the join
+        # broadcast whatever the size estimate (r7)
         return F.broadcast(out)
 
     a, b = F.col("a"), F.col("b")

@@ -609,15 +609,21 @@ def run_extraction(
     return documents.select("conv_id", "text").mapInPandas(gen, schema=schema)
 
 
-def _model_stage_tasks(df: DataFrame,
+def _model_stage_tasks(df: DataFrame, extractor: str, model_cost_ms: float,
                        tasks_per_core: Optional[int] = None) -> int:
-    """Task count for the pinned model-stage repartition.
+    """Task count for the pinned model-stage repartition, sized by model
+    cost: defaultParallelism x4 when the stage carries model cost, x2 when
+    it carries none (the regex extractor at ``model_cost_ms == 0``).
 
-    tasks-per-core default 4: enough waves that one straggling task (GC,
-    co-tenant steal burst, a long conversation) delays its own lane by a
-    fraction of the stage instead of idling every other lane through a
-    2-wave tail — measured on the 24k-conv calibrated scaling leg (r4).
-    ``tasks_per_core`` is threaded from PipelineConfig.model_tasks_per_core;
-    None means the default."""
-    per_core = 4 if tasks_per_core is None else tasks_per_core
-    return max(df.sparkSession.sparkContext.defaultParallelism * per_core, 8)
+    x4: enough waves that one straggling task (GC, co-tenant steal burst,
+    a long conversation) delays its own lane by a fraction of the stage
+    instead of idling every other lane through a 2-wave tail — measured
+    on the 24k-conv calibrated scaling leg (r4).  x2: a cost-0 stage is
+    scheduling-bound, and every Python task pays a fixed start-up of
+    ~0.2-0.3 s before its first row (docs/PLANS.md), so extra tasks only
+    add overhead.  ``tasks_per_core`` (PipelineConfig.model_tasks_per_core)
+    overrides the rule."""
+    if tasks_per_core is None:
+        tasks_per_core = 2 if extractor == "regex" and model_cost_ms == 0 else 4
+    return max(df.sparkSession.sparkContext.defaultParallelism
+               * tasks_per_core, 8)

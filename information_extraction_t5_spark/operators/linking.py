@@ -5,7 +5,8 @@ Three scale-aware pieces:
   - alias dictionary broadcast join (the reference's variation expansion,
     highlights.py:13-58, generalized): surface form -> canonical id.
   - MinHash blocking for fuzzy candidate generation: shingle -> minhash
-    signature -> band buckets -> equi-join on bucket, then exact
+    signature (per row, or per group as min aggregates over exploded
+    shingles) -> band buckets -> equi-join on bucket, then exact
     Levenshtein re-rank (reference semantics: highlights.py:96-174).
     Candidate generation never compares all pairs — the equi-join on
     (band, band_hash) is the blocker.
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 from typing import List, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,7 +40,11 @@ def alias_rows() -> List[dict]:
 
 
 def alias_df(spark) -> DataFrame:
-    return spark.createDataFrame(alias_rows(), "alias string, canonical string")
+    """The alias dictionary as a local relation, built through Arrow: a
+    Python list would be pickled through a Python-worker task on every
+    read."""
+    return spark.createDataFrame(pa.Table.from_pylist(alias_rows()),
+                                 "alias string, canonical string")
 
 
 def link_aliases(
@@ -89,110 +95,102 @@ def char_shingles(col, k: int = 3):
     )
 
 
-def minhash_signature(col, n_hashes: int = 16, k: int = 3,
-                      fast: bool = False):
-    """Per seed, the min hash over shingles.
-
-    Default md5 strings are engine-portable (DuckDB computes the identical
-    signature — used by the oracle-checked queries); ``fast=True`` uses
-    xxhash64 longs (~5x cheaper) for internal pipelines.
-    """
-    sh = char_shingles(col, k)
-
-    def seeded(seed: int):
-        # closure factory: a 2-param lambda would receive (element, index)
-        # from transform() and clobber the seed
-        if fast:
-            return lambda s: F.xxhash64(s, F.lit(seed))
-        return lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, seeded(i))) for i in range(n_hashes)]
-    )
+def _seeded_hash(s, seed: int, fast: bool = False):
+    """The MinHash family: md5('<seed>:' || s) hex strings, engine-portable
+    (DuckDB computes the identical value, oracle_sql._minhash16_sql);
+    ``fast=True`` uses xxhash64(s, seed) longs (~5x cheaper)."""
+    if fast:
+        return F.xxhash64(s, F.lit(seed))
+    return F.md5(F.concat(F.lit(f"{seed}:"), s))
 
 
 def with_minhash_signature(df: DataFrame, out_col: str, text_col,
                            n_hashes: int = 16, k: int = 3,
                            fast: bool = False) -> DataFrame:
-    """df + ``out_col`` = minhash signature array, with the shingle array
-    STAGED as its own projection first (r7).
-
-    minhash_signature() inlines char_shingles into every per-seed
-    array_min(transform(...)) — and HOF lambdas have no CSE, so the
-    shingles are re-extracted once per hash seed (n_hashes x substring
-    work per row).  Identical output values.
-    """
+    """df + ``out_col`` = per-row minhash signature array (per seed, the
+    min hash over the shingles), with the shingle array STAGED as its own
+    projection first (r7): HOF lambdas have no CSE, so an inline shingle
+    array is re-extracted once per hash seed.  ``lsh_buckets`` bands it
+    per row; the fuzzy stage uses the aggregate form, ``minhash_bands``."""
     sh_col = f"__mh_sh_{out_col}"
     step = df.withColumn(sh_col, char_shingles(text_col, k))
-    sh = F.col(sh_col)
 
     def seeded(seed: int):
-        if fast:
-            return lambda s: F.xxhash64(s, F.lit(seed))
-        return lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))
+        # closure factory: a 2-param lambda would receive (element, index)
+        # from transform() and clobber the seed
+        return lambda s: _seeded_hash(s, seed, fast)
 
-    sig = F.array(
-        *[F.array_min(F.transform(sh, seeded(i))) for i in range(n_hashes)]
-    )
+    sig = F.array(*[F.array_min(F.transform(F.col(sh_col), seeded(i)))
+                    for i in range(n_hashes)])
     return step.withColumn(out_col, sig).drop(sh_col)
 
 
-def lsh_buckets(df: DataFrame, id_col: str, text_col: str,
-                n_hashes: int = 16, bands: int = 4, k: int = 3,
-                fast: bool = False,
-                carry_value: bool = False) -> DataFrame:
-    """(id[, val], band, band_key): one row per band; equal band_key =>
-    candidate.  ``carry_value=True`` rides the text through as ``val`` so
-    a downstream verify can compare values without re-joining them (r7)."""
+def _band_keys(sig, n_hashes: int, bands: int):
+    """(band, band_key) rows of a signature array: band b is the '|'-joined
+    hashes b*r .. b*r+r-1 (r = n_hashes // bands)."""
     rows_per_band = n_hashes // bands
-    # materialize the shingle array BEFORE the n_hashes min-hash passes
-    # (r6): the signature references the shingles once per hash seed, and
-    # HOF lambdas have no CSE — an inline char_shingles here re-extracted
-    # every substring n_hashes times per row
-    carry = [F.col(text_col).alias("val")] if carry_value else []
-    step = df.select(
-        F.col(id_col).alias("id"),
-        *carry,
-        char_shingles(F.col(text_col), k).alias("__lsh_sh"),
-    )
-    sh = F.col("__lsh_sh")
+    return F.posexplode(F.array(*[
+        F.concat_ws("|", F.slice(sig, b * rows_per_band + 1, rows_per_band))
+        for b in range(bands)
+    ])).alias("band", "band_key")
 
-    def seeded(seed: int):
-        if fast:
-            return lambda s: F.xxhash64(s, F.lit(seed))
-        return lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))
 
-    sig = F.array(
-        *[F.array_min(F.transform(sh, seeded(i))) for i in range(n_hashes)]
+def minhash_bands(df: DataFrame, text_col: str, keys: List[str],
+                  aggs=(), n_hashes: int = 16, bands: int = 4, k: int = 3,
+                  fast: bool = False) -> DataFrame:
+    """(*keys, *aggs, band, band_key): LSH band keys of ``text_col``'s
+    minhash signature, one row per group of ``keys`` and band; equal
+    band_key => candidate.  ``text_col`` must be constant within a group.
+
+    The shingles are exploded once and each seed's hash is a plain ``min``
+    aggregate of ``groupBy(keys)``: codegen'd, and computed map-side by the
+    partial aggregation on every input partition — not an interpreted
+    ``array_min(transform(...))`` lambda per seed.  ``aggs`` ride the same
+    aggregate.  Every input row is hashed, so deduplicate first where the
+    groups repeat (the fuzzy stage does).  Values equal
+    ``with_minhash_signature``'s (with md5 a NULL text hashes to NULL, so
+    its band keys are "")."""
+    sh = F.col("__mh_sh")
+    sig = [F.min(_seeded_hash(sh, i, fast)).alias(f"__mh{i}")
+           for i in range(n_hashes)]
+    grouped = (
+        df.withColumn("__mh_sh", F.explode(char_shingles(F.col(text_col), k)))
+        .groupBy(*keys)
+        .agg(*aggs, *sig)
     )
-    out = step.select("id", *(["val"] if carry_value else []),
-                      sig.alias("sig"))
-    return out.select(
-        "id",
-        *(["val"] if carry_value else []),
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        "|", F.slice(F.col("sig"), b * rows_per_band + 1,
-                                     rows_per_band)
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "band_key"),
+    return grouped.select(
+        *[c for c in grouped.columns if not c.startswith("__mh")],
+        _band_keys(F.array(*[F.col(f"__mh{i}") for i in range(n_hashes)]),
+                   n_hashes, bands),
     )
+
+
+def lsh_buckets(df: DataFrame, id_col: str, text_col: str,
+                n_hashes: int = 16, bands: int = 4,
+                k: int = 3) -> DataFrame:
+    """(id, band, band_key): one row per input row and band; equal
+    band_key => candidate.  Narrow: the per-row signature of
+    ``with_minhash_signature``, sliced into bands."""
+    step = with_minhash_signature(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__lsh")),
+        "sig", F.col("__lsh"), n_hashes, k,
+    )
+    return step.select("id", _band_keys(F.col("sig"), n_hashes, bands))
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
                         n_hashes: int = 16, bands: int = 4,
-                        k: int = 3,
-                        max_bucket: Optional[int] = None,
-                        fast: bool = False,
-                        materialize: bool = True,
-                        carry_value: bool = False,
-                        distinct_pairs: bool = True) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) sharing any band bucket.
+                        k: int = 3) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) sharing any band bucket of
+    ``lsh_buckets``."""
+    return bucket_pairs(lsh_buckets(df, id_col, text_col, n_hashes, bands, k))
+
+
+def bucket_pairs(b: DataFrame, max_bucket: Optional[int] = None,
+                 carry_value: bool = False,
+                 distinct_pairs: bool = True) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of (id[, val], band, band_key) rows
+    sharing a bucket.
 
     The self-join is on (band, band_key) — shuffle is hash-partitioned on
     the bucket key, never all-pairs.  Dedup across bands via distinct.
@@ -211,14 +209,11 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     consumers that are duplicate-insensitive (connected components);
     the default keeps the documented distinct-pairs contract.
     """
-    b = lsh_buckets(df, id_col, text_col, n_hashes, bands, k, fast=fast,
-                    carry_value=carry_value)
-    if materialize:
-        # the bucket table feeds both self-join sides (and the bucket-size
-        # window); without materialization each branch recomputes every
-        # minhash signature.  Lazy (r7): the materialization folds into
-        # the first consuming job instead of paying its own blocking job.
-        b = b.localCheckpoint(eager=False)
+    # the bucket table feeds both self-join sides (and the bucket-size
+    # window); without materialization each branch recomputes every
+    # minhash signature.  Lazy (r7): the materialization folds into the
+    # first consuming job instead of paying its own blocking job.
+    b = b.localCheckpoint(eager=False)
     if max_bucket is not None:
         # bucket-size cap as a window count (r7): one exchange on
         # (band, band_key) that the self-join below then reuses —

@@ -57,8 +57,9 @@ class PipelineConfig:
     model_name: Optional[str] = None
     model_cost_ms: float = 0.0   # emulated per-window model latency (bench)
     model_tasks_per_core: Optional[int] = None
-    # model-stage repartition width per core (extraction._model_stage_tasks);
-    # None = the default, 4
+    # model-stage repartition width per core; None = sized by model cost
+    # in extraction._model_stage_tasks (x2 for the cost-0 regex stage, x4
+    # otherwise)
     choose_question: str = "first"   # 'first' | 'random' | 'all' paraphrase
     question_seed: int = 13          # seed for the 'random' md5 draw
     link_predicates: List[str] = field(
@@ -69,9 +70,9 @@ class PipelineConfig:
     fuzzy_link_max_dist: int = 2  # levenshtein budget for blocked pairs
     fuzzy_hash: str = "md5"       # 'md5' = oracle-replayable signatures
     # (DuckDB computes the identical minhash); 'xxhash64' is ~5x cheaper
-    # per hash for ultra-scale runs — the stage only hashes |distinct
-    # names|, so md5 is the default and the whole pipeline stays
-    # cross-engine checkable
+    # per hash for ultra-scale runs — the stage hashes each distinct
+    # name once (min aggregates over its shingles, on every core), so md5
+    # is the default and the whole pipeline stays cross-engine checkable
     # (identity matching is stricter than span matching; the reference's
     # span schedule allows 5 edits for long strings, highlights.py:96-106)
     subj_buckets: int = 64        # subj-hash write partitioning
@@ -94,7 +95,8 @@ def extract_triples(spark: SparkSession, transcripts: DataFrame,
     exchange), AQE honors the user-specified partition count (no
     byte-coalescing collapse of the model stage), and extraction runs
     narrow on the assembled documents."""
-    target = _model_stage_tasks(transcripts, cfg.model_tasks_per_core)
+    target = _model_stage_tasks(transcripts, cfg.extractor,
+                                cfg.model_cost_ms, cfg.model_tasks_per_core)
     docs = assemble_documents(transcripts.repartition(target, "conv_id"))
     return run_extraction(
         docs, cfg.window,
@@ -115,6 +117,43 @@ def link_triples(triples: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def _name_bands(triples: DataFrame, hash_fn: str = "md5") -> DataFrame:
+    """(val, id, band, band_key): the LSH band keys of each DISTINCT
+    normalized person name, with its representative (min) conv id."""
+    from information_extraction_t5_spark.operators.linking import (
+        minhash_bands,
+    )
+
+    # one representative conv per distinct name: exact-equal names already
+    # merge through the exact mention key, so the fuzzy stage only needs
+    # edges between distinct surface forms (|convs| -> |distinct names|).
+    # The names are hash-partitioned on a pinned width, which AQE keeps,
+    # so the dedup and then the minhash aggregate share one stage on every
+    # core: each distinct name is hashed once, not once per mention, and
+    # not in the one task AQE coalesces the distinct names to otherwise.
+    # Measured, 60k mentions on 4 vCPU, one-task row signature ->
+    # this: 1 mention/name 23.6 -> 10.1 s; 10/name 4.64 -> 3.13 s;
+    # 50/name 1.69 -> 1.55 s (hashing every mention inside the aggregate,
+    # no dedup first: 9.2, 6.82 and 6.08 s).
+    # Only this stage is pinned: a forced spread of the whole LSH chain
+    # costs per-task scheduling in every downstream mini-stage (r3: 8.9s
+    # vs 14.2s tail wall at local[32]).
+    width = triples.sparkSession.sparkContext.defaultParallelism
+    name_rep = (
+        triples.filter(F.col("pred") == "form.nome_completo")
+        .select(F.col("conv_id").alias("id"),
+                normalize_answer(F.col("obj")).alias("val"))
+        .repartition(width, "val")
+        .groupBy("val")
+        .agg(F.min("id").alias("id"))
+    )
+    # 4 bands x 4 hashes: bucket-match threshold ~Jaccard 0.7 — tight
+    # enough that word-sharing names don't flood the candidate set, loose
+    # enough to catch <=2-edit typos on 20+-char names.
+    return minhash_bands(name_rep, "val", ["val", "id"], n_hashes=16,
+                         bands=4, k=3, fast=(hash_fn != "md5"))
+
+
 def fuzzy_name_edges(triples: DataFrame, max_dist: int = 3,
                      hash_fn: str = "md5") -> DataFrame:
     """Extra mention-mention edges from NEAR-duplicate person names.
@@ -126,48 +165,19 @@ def fuzzy_name_edges(triples: DataFrame, max_dist: int = 3,
     ceiling).  Output: (src, dst) conversation pairs.
     """
     from information_extraction_t5_spark.operators.linking import (
-        lsh_candidate_pairs,
+        bucket_pairs,
     )
 
-    # one representative conv per DISTINCT normalized name: exact-equal
-    # names already merge through the exact mention key, so the fuzzy
-    # stage only needs edges between distinct surface forms — this
-    # collapses the LSH input from |convs| to |distinct names|
-    name_rep = (
-        triples.filter(F.col("pred") == "form.nome_completo")
-        .select(
-            F.col("conv_id").alias("id"),
-            normalize_answer(F.col("obj")).alias("name"),
-        )
-        .groupBy("name")
-        .agg(F.min("id").alias("id"))
-        # Measured (r3): do NOT force a repartition here to spread the
-        # minhash compute — at |distinct names| ~ 10^4 the AQE-coalesced
-        # 1-2 partition layout beats any explicit spread, because every
-        # downstream mini-stage of the LSH chain then pays per-task
-        # scheduling on partitions it doesn't need (8.9s vs 14.2s tail
-        # wall at local[32]).  At cluster scale |distinct names| grows
-        # past AQE's advisory bytes and the coalesce widens on its own.
-        # r7: carry_value removed the two rerank joins, leaving the bucket
-        # build as the ONLY consumer — the r6 lazy checkpoint became pure
-        # overhead and is gone.
-    )
-    # 4 bands x 4 hashes: bucket-match threshold ~Jaccard 0.7 — tight
-    # enough that word-sharing names don't flood the candidate set, loose
-    # enough to catch <=2-edit typos on 20+-char names.
     # carry_value (r7): name groups partition the convs, so each rep id
     # maps 1:1 to its name — riding the names through the bucket self-join
-    # lets the Levenshtein verify run inline, dropping the two
-    # levenshtein_rerank value joins from the chain (edges identical,
+    # lets the Levenshtein verify run inline, with no value joins (edges
     # pinned by test_fuzzy_linking.test_carried_value_edges_match_rerank).
     # distinct_pairs=False: the consumer is connected components, which
     # is duplicate-insensitive — the cross-band dedup shuffle bought
     # nothing (the Levenshtein re-check on a few thousand candidate rows
     # is cheaper than the shuffle it saved)
-    cand = lsh_candidate_pairs(name_rep, "id", "name",
-                               n_hashes=16, bands=4, k=3, max_bucket=64,
-                               fast=(hash_fn != "md5"), carry_value=True,
-                               distinct_pairs=False)
+    cand = bucket_pairs(_name_bands(triples, hash_fn), max_bucket=64,
+                        carry_value=True, distinct_pairs=False)
     kept = (
         cand.filter(
             F.abs(F.length("val_a") - F.length("val_b")) <= max_dist

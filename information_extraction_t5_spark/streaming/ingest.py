@@ -122,9 +122,9 @@ def stream_pipeline(
         # groupBy exchange, whose read AQE then byte-coalesces; round-robin
         # survives both.
         docs = batch_df.select("conv_id", "text")
-        docs = docs.repartition(
-            _model_stage_tasks(docs, cfg.model_tasks_per_core)
-        )
+        docs = docs.repartition(_model_stage_tasks(
+            docs, cfg.extractor, cfg.model_cost_ms, cfg.model_tasks_per_core
+        ))
         # per-window candidates, not in-batch triples: a micro-batch can
         # hold two sessions of one conv, so the top-1 must be global
         scored = run_extraction(

@@ -57,8 +57,10 @@ def test_carried_value_edges_match_rerank(spark):
     """carry_value inline Levenshtein (r7) == levenshtein_rerank joins,
     for 1:1 id->value inputs like the pipeline's name_rep frame."""
     from information_extraction_t5_spark.operators.linking import (
+        bucket_pairs,
         levenshtein_rerank,
-        lsh_candidate_pairs,
+        lsh_buckets,
+        minhash_bands,
     )
     from pyspark.sql import functions as F
 
@@ -72,11 +74,14 @@ def test_carried_value_edges_match_rerank(spark):
         [(i, n) for i, n in enumerate(names)], "id long, name string"
     )
 
-    old_cand = lsh_candidate_pairs(df, "id", "name", n_hashes=16, bands=4,
-                                   k=3, max_bucket=64)
+    old_cand = bucket_pairs(lsh_buckets(df, "id", "name", n_hashes=16,
+                                        bands=4, k=3), max_bucket=64)
     old = levenshtein_rerank(old_cand, df, "id", "name", max_dist=2)
-    new_cand = lsh_candidate_pairs(df, "id", "name", n_hashes=16, bands=4,
-                                   k=3, max_bucket=64, carry_value=True)
+    # the fuzzy stage's form: name-keyed aggregate bands carrying the value
+    named = df.select("id", F.col("name").alias("val"))
+    new_cand = bucket_pairs(minhash_bands(named, "val", ["val", "id"],
+                                          n_hashes=16, bands=4, k=3),
+                            max_bucket=64, carry_value=True)
     new = (
         new_cand.filter(
             F.abs(F.length("val_a") - F.length("val_b")) <= 2

@@ -101,6 +101,9 @@ def test_model_stage_parallelism_survives_aqe(spark):
     model stage — guard the exchange count, the pin, and the runtime
     partition spread of the stage output."""
     from information_extraction_t5_spark.data import synth
+    from information_extraction_t5_spark.operators.extraction import (
+        _model_stage_tasks,
+    )
     from information_extraction_t5_spark.pipeline import (
         PipelineConfig,
         extract_triples,
@@ -118,14 +121,36 @@ def test_model_stage_parallelism_survives_aqe(spark):
     n_parts = (
         scored.select(F.spark_partition_id().alias("p")).distinct().count()
     )
-    # hash spread of 40 convs over >= 4x-core partitions: a handful of
-    # collisions are fine, a byte-coalescing collapse (1-2 partitions,
-    # the r1 failure mode) is not
-    want = min(40, spark.sparkContext.defaultParallelism)
-    assert n_parts >= want, (
-        f"model stage ran in {n_parts} partitions; byte-coalescing "
-        f"collapse regressed (want >= {want})"
+    # the 40 convs occupy exactly the hash partitions Spark's own hash
+    # assigns them at the pinned width, whatever the host's core count; a
+    # byte-coalescing collapse (1-2 partitions, the r1 failure mode) would
+    # not
+    width = _model_stage_tasks(transcripts, cfg.extractor, cfg.model_cost_ms,
+                               cfg.model_tasks_per_core)
+    want = (
+        transcripts.select(F.pmod(F.hash("conv_id"), F.lit(width)).alias("p"))
+        .distinct().count()
     )
+    assert want > 2
+    assert n_parts == want, (
+        f"model stage ran in {n_parts} partitions; the {width}-way hash "
+        f"spread of the 40 convs occupies {want}"
+    )
+
+
+def test_model_stage_width_follows_model_cost(spark):
+    """x2 tasks per core for the cost-0 regex stage, x4 once the stage
+    carries model cost; an explicit tasks-per-core wins."""
+    from information_extraction_t5_spark.operators.extraction import (
+        _model_stage_tasks,
+    )
+
+    df = spark.range(1)
+    cores = spark.sparkContext.defaultParallelism
+    assert _model_stage_tasks(df, "regex", 0.0) == max(2 * cores, 8)
+    assert _model_stage_tasks(df, "regex", 30.0) == max(4 * cores, 8)
+    assert _model_stage_tasks(df, "seq2seq", 0.0) == max(4 * cores, 8)
+    assert _model_stage_tasks(df, "regex", 0.0, 3) == max(3 * cores, 8)
 
 
 class _Staged(Exception):
@@ -168,8 +193,9 @@ def test_stage_triples_plan_is_one_exchange_one_python_stage(
     added = staged - _nodes(_plan(extract_triples(spark, transcripts, cfg)))
     assert added["BroadcastExchange"] == 1
     assert added["BroadcastHashJoin"] == 1
+    # the alias table is an Arrow-built local relation (LocalTableScan)
     assert set(added) <= {"BroadcastExchange", "BroadcastHashJoin",
-                          "Project", "Filter", "Scan"}, added
+                          "Project", "Filter", "LocalTableScan"}, added
 
 
 def test_squad_conversion_plan_is_broadcast_and_python_free(spark):

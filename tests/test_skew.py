@@ -70,7 +70,8 @@ def test_hot_entity_linking_bounded(spark):
         canonical_entities,
     )
     from information_extraction_t5_spark.operators.linking import (
-        lsh_candidate_pairs,
+        bucket_pairs,
+        lsh_buckets,
     )
 
     # --- shape (a): exact-duplicate hot name over 30% of mentions ------
@@ -101,12 +102,9 @@ def test_hot_entity_linking_bounded(spark):
         )
     ][:256]
     names = spark.createDataFrame(variants, ["id", "name"])
-    capped = lsh_candidate_pairs(
-        names, "id", "name", n_hashes=16, bands=4, k=3, max_bucket=16
-    ).count()
-    uncapped = lsh_candidate_pairs(
-        names, "id", "name", n_hashes=16, bands=4, k=3, max_bucket=None
-    ).count()
+    buckets = lsh_buckets(names, "id", "name", n_hashes=16, bands=4, k=3)
+    capped = bucket_pairs(buckets, max_bucket=16).count()
+    uncapped = bucket_pairs(buckets, max_bucket=None).count()
     # all-pairs would be ~256^2/2 = 32k: the variants are near-identical,
     # so uncapped LSH puts most of them in shared buckets
     assert uncapped > 10_000

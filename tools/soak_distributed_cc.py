@@ -39,8 +39,7 @@ def main():
     logger.addHandler(handler)
     logger.setLevel(logging.INFO)
 
-    cfg_fuzzy = PipelineConfig(fuzzy_hash="xxhash64", cc_driver_threshold=0,
-                               model_tasks_per_core=2)
+    cfg_fuzzy = PipelineConfig(fuzzy_hash="xxhash64", cc_driver_threshold=0)
     # warmup (JIT + python workers), small corpus, same code path
     run_pipeline(spark, synth.transcripts_df(spark, 100, partitions=2 * cpus),
                  cfg_fuzzy).count()
@@ -60,8 +59,7 @@ def main():
     cc_log.clear()
     t0 = time.time()
     n2 = run_pipeline(spark, transcripts,
-                      PipelineConfig(fuzzy_hash="xxhash64",
-                                     model_tasks_per_core=2)).count()
+                      PipelineConfig(fuzzy_hash="xxhash64")).count()
     wall2 = time.time() - t0
     assert n == n2, f"distributed vs driver CC rows differ: {n} != {n2}"
     print(f"driver-CC comparison:  wall={wall2:.2f}s (same {n2} triples) "
