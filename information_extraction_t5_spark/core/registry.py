@@ -113,14 +113,6 @@ def display_type(typename: str) -> str:
     return TYPENAME_TO_TYPE[typename]
 
 
-def typename_of(display: str) -> str:
-    """Map a bracket clue back to its typename; raises on unknown
-    (reference: sentences.py:77-86)."""
-    if display not in TYPE_TO_TYPENAME:
-        raise ValueError(f"Unknown type name: {display}")
-    return TYPE_TO_TYPENAME[display]
-
-
 def registry_rows(predicates: Optional[List[Predicate]] = None) -> List[dict]:
     """Flat rows for the broadcast registry DataFrame."""
     preds = DEFAULT_PREDICATES if predicates is None else predicates

@@ -63,15 +63,3 @@ def split_context_sentences(col: Column) -> Column:
 def sent_id_is_valid(context: Column, sid: Column) -> Column:
     """0 <= sid <= n_sentences (reference: sentences.py:156-171)."""
     return (sid >= 0) & (F.size(split_context_sentences(context)) >= sid)
-
-
-def strip_raw_complement(col: Column) -> Column:
-    """Drop the '[aparece no texto] ...' tail (reference: sentences.py:259-278
-    inverse: keep the canonical part)."""
-    return F.trim(F.split(col, r"\[aparece no texto\]", 2)[0])
-
-
-def raw_complement(col: Column) -> Column:
-    """The raw surface form after the complement clue, else NULL."""
-    parts = F.split(col, r"\[aparece no texto\]", 2)
-    return F.when(F.size(parts) >= 2, F.trim(parts[1]))

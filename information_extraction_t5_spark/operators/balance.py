@@ -22,18 +22,6 @@ def is_negative(label_col) -> "F.Column":
     return F.col(label_col).contains("N/A")
 
 
-def pos_neg_counts(df: DataFrame, label_col: str = "label",
-                   doc_col: str = "document_id",
-                   ex_col: str = "example_id") -> DataFrame:
-    """Per-(doc, example) positive/negative counts
-    (reference: balance_data.py:8-27)."""
-    neg = is_negative(label_col)
-    return df.groupBy(doc_col, ex_col).agg(
-        F.sum(F.when(neg, 1).otherwise(0)).alias("n_neg"),
-        F.sum(F.when(~neg, 1).otherwise(0)).alias("n_pos"),
-    )
-
-
 def balance(df: DataFrame, negative_ratio: int = 1, seed: int = 42,
             label_col: str = "label", doc_col: str = "document_id",
             ex_col: str = "example_id") -> DataFrame:

@@ -54,13 +54,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
-                        n_hashes: int = 16, bands: int = 4,
-                        k: int = 5) -> DataFrame:
-    """Near-dup candidate pairs via minhash banding (see linking.py)."""
-    return lsh_candidate_pairs(df, id_col, text_col, n_hashes, bands, k)
-
-
 def word_ngrams(col, n: int = 3):
     """array<string> of word n-grams."""
     toks = F.split(F.lower(F.trim(col)), r"\s+")

@@ -148,13 +148,15 @@ def minhash_bands(df: DataFrame, text_col: str, keys: List[str],
     ``array_min(transform(...))`` lambda per seed.  ``aggs`` ride the same
     aggregate.  Every input row is hashed, so deduplicate first where the
     groups repeat (the fuzzy stage does).  Values equal
-    ``with_minhash_signature``'s (with md5 a NULL text hashes to NULL, so
-    its band keys are "")."""
+    ``with_minhash_signature``'s.  NULL texts get no band rows: their
+    signature is a constant (NULL with md5, the seeds with xxhash64), so
+    every NULL text would share one bucket per band with every other."""
     sh = F.col("__mh_sh")
     sig = [F.min(_seeded_hash(sh, i, fast)).alias(f"__mh{i}")
            for i in range(n_hashes)]
     grouped = (
-        df.withColumn("__mh_sh", F.explode(char_shingles(F.col(text_col), k)))
+        df.filter(F.col(text_col).isNotNull())
+        .withColumn("__mh_sh", F.explode(char_shingles(F.col(text_col), k)))
         .groupBy(*keys)
         .agg(*aggs, *sig)
     )
@@ -170,9 +172,12 @@ def lsh_buckets(df: DataFrame, id_col: str, text_col: str,
                 k: int = 3) -> DataFrame:
     """(id, band, band_key): one row per input row and band; equal
     band_key => candidate.  Narrow: the per-row signature of
-    ``with_minhash_signature``, sliced into bands."""
+    ``with_minhash_signature``, sliced into bands.  NULL texts get no rows
+    (see ``minhash_bands``); an empty text keeps its bucket, shared only
+    with other empty texts."""
     step = with_minhash_signature(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__lsh")),
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__lsh"))
+        .filter(F.col("__lsh").isNotNull()),
         "sig", F.col("__lsh"), n_hashes, k,
     )
     return step.select("id", _band_keys(F.col("sig"), n_hashes, bands))

@@ -1,33 +1,18 @@
 """Multimodal column plumbing (binary payloads + typed metadata).
 
-Images/audio/video ride as opaque ``binary`` columns with a metadata struct;
-decode/feature-extraction run as Arrow-batched mapInPandas stages.  The
-Spark-side contract (schema, batch shape, partitioning) is real and tested.
-Decode has three tiers (r4, extended r6):
-
-  - ``decode_stdlib`` — REAL decode, no codec libraries required: WAV
-    (stdlib ``wave``), binary P6 PPM, uncompressed 24bpp BMP (struct +
-    numpy), non-interlaced 8-bit PNG (zlib + full filter reversal),
-    baseline JPEG incl. 4:2:0 + restart markers (pure-numpy codec,
-    operators/jpeg.py), and MP4/MOV container metadata — duration,
-    dims, codecs (operators/mp4.py).
-  - ``decode_real`` — injection point for compressed A/V essence
-    (h264/h265/AAC frames, progressive JPEG, OGG) via PIL/soundfile/av;
-    this container intentionally lacks them, so it raises
-    NotImplementedError.
-  - ``_fake_feature`` — the deterministic oracle-replayable stub the
-    driver correctness gate uses (sha256-of-hex so DuckDB can replay it).
+Images/audio/video ride as opaque ``binary`` columns with a metadata
+struct; feature extraction runs as an Arrow-batched mapInPandas stage.
+The feature is a deterministic stub, ``_fake_feature`` (sha256 of the
+payload's hex), so the ``media_features`` query can be replayed by a SQL
+oracle.  No codec is decoded here.
 """
 from __future__ import annotations
 
 import hashlib
-import struct
-import zlib
-from typing import Callable, Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, "
@@ -64,465 +49,19 @@ def _fake_feature(payload: bytes, dim: int = 8) -> list:
     return [round(b / 255.0, 6) for b in h[:dim]]
 
 
-def extract_features(
-    media: DataFrame,
-    decoder: Optional[Callable[[bytes, str], list]] = None,
-    dim: int = 8,
-) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
-
-    ``decoder(payload, kind) -> list[float]`` is injected; default is the
-    deterministic stub.  Real decoders (PIL/librosa/ffmpeg) plug in without
-    touching the Spark plumbing.
-
-    Undecodable payloads yield ``feature = NULL`` with ``ok = false``
-    (r5 migration note: previously a zero vector — a forgotten ``ok``
-    filter silently averaged zeros into downstream aggregates; a null
-    propagates/vanishes loudly instead.  Consumers that want the old
-    shape: ``coalesce(feature, array_repeat(0.0f, dim))``).
-    """
-    decode = decoder or (lambda payload, kind: _fake_feature(payload, dim))
+def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
+    """mapInPandas feature extraction over binary payloads: one
+    ``_fake_feature`` vector per row, ``ok`` always true (the stub cannot
+    fail; the column stays part of the ``media_features`` contract)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats, oks = [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                try:
-                    feats.append(decode(bytes(payload or b""), kind))
-                    oks.append(True)
-                except (NotImplementedError, ValueError, EOFError,
-                        IndexError, KeyError, struct.error, zlib.error,
-                        OverflowError):
-                    # ADVICE r6 (high): the real stdlib decoders raise
-                    # parse errors on corrupt/truncated payloads — one
-                    # malformed file must degrade to ok=False, never kill
-                    # the task (the module's documented contract)
-                    feats.append(None)
-                    oks.append(False)
             out = pdf[["media_id", "kind"]].copy()
-            out["feature"] = feats
-            out["ok"] = oks
+            out["feature"] = [
+                _fake_feature(bytes(payload or b""), dim)
+                for payload in pdf["payload"]
+            ]
+            out["ok"] = True
             yield out
 
     return media.mapInPandas(gen, schema=FEATURE_SCHEMA)
-
-
-def decode_real(payload: bytes, kind: str) -> list:
-    """Placeholder for a full FRAME-decode codec path (h264/h265/AAC
-    essence, progressive JPEG, OGG...).  Container metadata for MP4 is
-    real (operators/mp4.py); image/audio decode for WAV/PPM/BMP/PNG/
-    baseline-JPEG is real too — only compressed A/V essence needs an
-    injected library.
-
-    Wire PIL.Image.open / soundfile.read / av frame sampling here; the
-    container intentionally lacks these libraries.  Formats the standard
-    library CAN parse are really decoded — see ``decode_stdlib``.
-    """
-    raise NotImplementedError(
-        f"no codec for kind={kind!r} in this environment; "
-        "inject a decoder into extract_features()"
-    )
-
-
-def _wav_features(payload: bytes, dim: int) -> list:
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(payload)) as w:
-        channels = w.getnchannels()
-        rate = w.getframerate()
-        width = w.getsampwidth()
-        nframes = w.getnframes()
-        raw = w.readframes(nframes)
-    if width == 2:
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 1:
-        samples = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64)
-                   - 128.0) / 128.0
-    else:
-        raise NotImplementedError(f"sample width {width} unsupported")
-    if samples.size == 0:
-        rms, zcr, peak = 0.0, 0.0, 0.0
-    else:
-        rms = float(np.sqrt(np.mean(samples ** 2)))
-        zcr = float(np.mean(np.signbit(samples[1:]) !=
-                            np.signbit(samples[:-1])))
-        peak = float(np.max(np.abs(samples)))
-    duration_s = nframes / rate if rate else 0.0
-    feats = [duration_s, rate / 48000.0, float(channels), rms, zcr, peak,
-             nframes / 1e6, float(width)]
-    return [round(f, 6) for f in (feats + [0.0] * dim)[:dim]]
-
-
-def _ppm_features(payload: bytes, dim: int) -> list:
-    import numpy as np
-
-    # P6 binary: b"P6\n<w> <h>\n<maxval>\n" then raw RGB triples
-    # (comment lines unsupported by design — synthetic corpora don't
-    # write them; a full parser belongs to an injected codec)
-    header, rest = payload.split(b"\n", 1)
-    if header.strip() != b"P6":
-        raise NotImplementedError("only binary P6 PPM")
-    dims, rest = rest.split(b"\n", 1)
-    maxval_raw, pixels = rest.split(b"\n", 1)
-    w, h = (int(x) for x in dims.split())
-    maxval = int(maxval_raw)
-    arr = np.frombuffer(pixels[: w * h * 3], dtype=np.uint8).reshape(-1, 3)
-    mean = arr.mean(axis=0) / max(maxval, 1)
-    feats = [float(w), float(h), w / max(h, 1), float(mean[0]),
-             float(mean[1]), float(mean[2]), maxval / 255.0, 0.0]
-    return [round(f, 6) for f in (feats + [0.0] * dim)[:dim]]
-
-
-def _bmp_features(payload: bytes, dim: int) -> list:
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != b"BM":
-        raise NotImplementedError("not a BMP")
-    pix_off = struct.unpack_from("<I", payload, 10)[0]
-    w, h = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError("only uncompressed 24bpp BMP")
-    row_bytes = (w * 3 + 3) & ~3  # rows padded to 4 bytes
-    rows = []
-    for y in range(abs(h)):
-        start = pix_off + y * row_bytes
-        rows.append(np.frombuffer(
-            payload[start:start + w * 3], dtype=np.uint8
-        ).reshape(-1, 3))
-    arr = np.vstack(rows)
-    mean = arr.mean(axis=0) / 255.0  # BGR order on disk
-    feats = [float(w), float(abs(h)), w / max(abs(h), 1), float(mean[2]),
-             float(mean[1]), float(mean[0]), 1.0, 0.0]
-    return [round(f, 6) for f in (feats + [0.0] * dim)[:dim]]
-
-
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_unfilter(raw: bytes, w: int, h: int, ch: int):
-    """Reverse PNG scanline filtering (spec §9: None/Sub/Up/Average/Paeth)
-    over 8-bit samples.  Per-pixel Python loop — fine for feature probes;
-    a production image pipeline injects a real codec via decode_real."""
-    import numpy as np
-
-    stride = w * ch
-    out = np.zeros((h, stride), dtype=np.int64)
-    pos = 0
-    for y in range(h):
-        ftype = raw[pos]
-        row = bytearray(raw[pos + 1: pos + 1 + stride])
-        pos += 1 + stride
-        prev = out[y - 1] if y > 0 else np.zeros(stride, dtype=np.int64)
-        cur = out[y]
-        for x in range(stride):
-            a = cur[x - ch] if x >= ch else 0      # left
-            b = prev[x]                             # up
-            c = prev[x - ch] if x >= ch else 0      # up-left
-            v = row[x]
-            if ftype == 0:
-                r = v
-            elif ftype == 1:
-                r = v + a
-            elif ftype == 2:
-                r = v + b
-            elif ftype == 3:
-                r = v + (a + b) // 2
-            elif ftype == 4:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (
-                    b if pb <= pc else c
-                )
-                r = v + pred
-            else:
-                raise NotImplementedError(f"PNG filter type {ftype}")
-            cur[x] = r & 0xFF
-    return out.reshape(h, w, ch)
-
-
-def _png_features(payload: bytes, dim: int) -> list:
-    """Real PNG decode via stdlib zlib: non-interlaced 8-bit grayscale /
-    gray+alpha / RGB / RGBA (color types 0/4/2/6).  Palette, 16-bit, and
-    interlaced PNGs stay on the codec injection point."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if payload[:8] != PNG_SIG:
-        raise NotImplementedError("not a PNG")
-    pos, ihdr, idat = 8, None, []
-    while pos + 8 <= len(payload):
-        (length,), ctype = struct.unpack_from(">I", payload, pos), \
-            payload[pos + 4: pos + 8]
-        data = payload[pos + 8: pos + 8 + length]
-        pos += 12 + length  # len + type + data + crc
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-    if ihdr is None or not idat:
-        raise NotImplementedError("truncated PNG")
-    w, h, depth, color, _comp, _filt, interlace = ihdr
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color)
-    if depth != 8 or channels is None or interlace != 0:
-        raise NotImplementedError(
-            f"PNG depth={depth} color={color} interlace={interlace} "
-            "outside the stdlib tier (inject a codec)"
-        )
-    raw = zlib.decompress(b"".join(idat))
-    px = _png_unfilter(raw, w, h, channels)
-    flat = px.reshape(-1, channels).astype(np.float64)
-    if channels >= 3:
-        mean_rgb = flat[:, :3].mean(axis=0) / 255.0
-        alpha = float(flat[:, 3].mean() / 255.0) if channels == 4 else 1.0
-    else:
-        g = float(flat[:, 0].mean() / 255.0)
-        mean_rgb = (g, g, g)
-        alpha = float(flat[:, 1].mean() / 255.0) if channels == 2 else 1.0
-    feats = [float(w), float(h), w / max(h, 1), float(mean_rgb[0]),
-             float(mean_rgb[1]), float(mean_rgb[2]), alpha, 0.0]
-    return [round(f, 6) for f in (feats + [0.0] * dim)[:dim]]
-
-
-def _jpeg_features(payload: bytes, dim: int) -> list:
-    """Real baseline-JPEG decode (operators/jpeg.py: pure numpy Huffman +
-    dequant + IDCT + YCbCr).  Progressive/arithmetic streams raise and
-    stay on the injection point."""
-    from information_extraction_t5_spark.operators.jpeg import (
-        decode_baseline_jpeg,
-    )
-
-    rgb = decode_baseline_jpeg(payload)
-    h, w = rgb.shape[:2]
-    mean = rgb.reshape(-1, 3).mean(axis=0) / 255.0
-    feats = [float(w), float(h), w / max(h, 1), float(mean[0]),
-             float(mean[1]), float(mean[2]), 1.0, 0.0]
-    return [round(f, 6) for f in (feats + [0.0] * dim)[:dim]]
-
-
-def _mp4_features(payload: bytes, dim: int) -> list:
-    """ISO-BMFF container metadata (operators/mp4.py): duration, video
-    dims, track mix — the routing/filter signals a curation pipeline
-    needs from video.  Frame decode stays on the injection point."""
-    from information_extraction_t5_spark.operators.mp4 import parse_mp4
-
-    meta = parse_mp4(payload)
-    vids = [t for t in meta["tracks"] if t["kind"] == "video"]
-    auds = [t for t in meta["tracks"] if t["kind"] == "audio"]
-    w = float(vids[0]["width"] or 0) if vids else 0.0
-    h = float(vids[0]["height"] or 0) if vids else 0.0
-    feats = [float(meta["duration_s"] or 0.0), w, h,
-             (w / h) if h else 0.0, float(len(vids)), float(len(auds)),
-             (meta["timescale"] or 0) / 1e5, 0.0]
-    return [round(f, 6) for f in (feats + [0.0] * dim)[:dim]]
-
-
-def decode_stdlib(payload: bytes, kind: str, dim: int = 8) -> list:
-    """REAL decode for formats the standard library + numpy can parse —
-    no codec libraries needed: WAV/PCM audio (stdlib ``wave``), binary
-    P6 PPM, uncompressed 24bpp BMP, non-interlaced 8-bit PNG (zlib
-    inflate + full filter reversal), and baseline JPEG (r6: pure-numpy
-    Huffman/IDCT decoder, operators/jpeg.py).  Features:
-    audio -> [duration_s, rate/48k, channels, rms, zero-cross rate, peak,
-    Mframes, sample_width]; image -> [w, h, aspect, mean_r, mean_g,
-    mean_b, depth_or_alpha, 0].  MP4/MOV containers parse to real
-    duration/dims/codec metadata (operators/mp4.py).  Anything else
-    (compressed A/V essence, progressive JPEG, palette PNG...) raises
-    NotImplementedError and stays the documented injection point."""
-    p = payload or b""
-    if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        return _wav_features(p, dim)
-    if p[:2] == b"P6":
-        return _ppm_features(p, dim)
-    if p[:2] == b"BM":
-        return _bmp_features(p, dim)
-    if p[:8] == PNG_SIG:
-        return _png_features(p, dim)
-    if p[:2] == b"\xff\xd8":
-        return _jpeg_features(p, dim)
-    if len(p) >= 12 and p[4:8] == b"ftyp":
-        return _mp4_features(p, dim)
-    return decode_real(p, kind)
-
-
-def write_png(w: int, h: int, pixels: bytes, channels: int = 3) -> bytes:
-    """Minimal PNG encoder (stdlib zlib, filter 0 rows) — deterministic
-    REAL payloads for the stdlib decode tier's tests/corpora.  ``pixels``
-    is row-major, ``channels`` in {1: gray, 2: gray+alpha, 3: RGB,
-    4: RGBA}."""
-    import struct
-    import zlib
-
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        body = ctype + data
-        return struct.pack(">I", len(data)) + body + struct.pack(
-            ">I", zlib.crc32(body) & 0xFFFFFFFF
-        )
-
-    stride = w * channels
-    raw = b"".join(
-        b"\x00" + pixels[y * stride: (y + 1) * stride] for y in range(h)
-    )
-    return (
-        PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw, 9))
-        + chunk(b"IEND", b"")
-    )
-
-
-def synthetic_real_media_df(spark, n: int = 24, seed: int = 42) -> DataFrame:
-    """Small media table whose payloads are REAL parseable files —
-    deterministic WAV sine tones, PPM gradients, BMP fills, PNG gradients
-    (r6) — plus one undecodable payload per cycle to exercise the
-    ok=False path."""
-    import io
-    import math as m
-    import struct
-    import wave
-
-    rows = []
-    for i in range(n):
-        variant = i % 6
-        if variant == 0:  # WAV: 16-bit mono sine, freq/length vary by i
-            rate = 8000
-            nframes = 400 + 40 * (i % 5)
-            freq = 220.0 * (1 + i % 3)
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(rate)
-                w.writeframes(b"".join(
-                    struct.pack(
-                        "<h",
-                        int(20000 * m.sin(2 * m.pi * freq * t / rate)),
-                    )
-                    for t in range(nframes)
-                ))
-            payload = buf.getvalue()
-            kind, meta = "audio", (None, None, nframes * 1000 // rate, "wav")
-        elif variant == 1:  # PPM: horizontal gradient
-            w_, h_ = 8 + i % 8, 6 + i % 4
-            pixels = bytes(
-                b for y in range(h_) for x in range(w_)
-                for b in (x * 255 // max(w_ - 1, 1), y * 255 // max(h_ - 1, 1),
-                          (i * 11) % 256)
-            )
-            payload = f"P6\n{w_} {h_}\n255\n".encode() + pixels
-            kind, meta = "image", (w_, h_, None, "ppm")
-        elif variant == 2:  # BMP: solid 24bpp fill, 4-byte row padding
-            w_, h_ = 5 + i % 6, 4 + i % 3
-            row = bytes((i % 256, (i * 3) % 256, (i * 7) % 256)) * w_
-            row += b"\x00" * ((4 - (w_ * 3) % 4) % 4)
-            pix = row * h_
-            header = (b"BM" + struct.pack("<IHHI", 54 + len(pix), 0, 0, 54)
-                      + struct.pack("<IiiHHIIiiII", 40, w_, h_, 1, 24, 0,
-                                    len(pix), 2835, 2835, 0, 0))
-            payload = header + pix
-            kind, meta = "image", (w_, h_, None, "bmp")
-        elif variant == 3:  # PNG: RGBA diagonal gradient (zlib-deflated)
-            w_, h_ = 6 + i % 5, 5 + i % 4
-            pixels = bytes(
-                b for y in range(h_) for x in range(w_)
-                for b in ((x * 37) % 256, (y * 53) % 256,
-                          ((x + y) * 29) % 256, 255 - (i % 64))
-            )
-            payload = write_png(w_, h_, pixels, channels=4)
-            kind, meta = "image", (w_, h_, None, "png")
-        elif variant == 4:  # baseline JPEG (4:2:0 + restarts on odd cycles)
-            import numpy as np
-
-            from information_extraction_t5_spark.operators.jpeg import (
-                encode_baseline_jpeg,
-            )
-
-            w_, h_ = 16 + 8 * (i % 3), 16 + 8 * (i % 2)
-            xs = np.linspace(0, 255, w_)
-            rgb = np.stack([
-                np.tile(xs, (h_, 1)),
-                np.full((h_, w_), float((i * 13) % 256)),
-                np.tile(xs[::-1], (h_, 1)),
-            ], axis=-1).astype(np.uint8)
-            payload = encode_baseline_jpeg(
-                rgb, subsample=bool(i % 2),
-                restart_interval=2 if i % 4 == 1 else 0,
-            )
-            kind, meta = "image", (w_, h_, None, "jpeg")
-        else:  # undecodable: exercises NotImplementedError -> ok=False
-            payload = hashlib.sha256(f"{seed}:{i}".encode()).digest()
-            kind, meta = "video", (None, None, 2000 + i, "mp4")
-        rows.append((f"r_{i:05d}", kind, bytearray(payload), meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def image_resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Aspect-preserving resize targets from typed metadata — pure
-    expressions; the decode+resample itself is the stubbed codec stage."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(
-        F.lit(float(max_side)) / w, F.lit(float(max_side)) / h, F.lit(1.0)
-    )
-    return media.filter(F.col("kind") == "image").select(
-        "media_id", "meta",
-        F.round(w * scale).cast("int").alias("target_w"),
-        F.round(h * scale).cast("int").alias("target_h"),
-        F.round(scale, 6).alias("scale"),
-    )
-
-
-def audio_chunk_plan(media: DataFrame, chunk_ms: int = 5000,
-                     overlap_ms: int = 500) -> DataFrame:
-    """Overlapping audio chunk boundaries (the ASR-feed shape): one row per
-    planned chunk, bounded by duration."""
-    stride = max(chunk_ms - overlap_ms, 1)
-    return (
-        media.filter(F.col("kind") == "audio")
-        .select(
-            "media_id",
-            F.posexplode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                    F.lit(stride),
-                )
-            ).alias("chunk_idx", "chunk_start_ms"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        )
-        .withColumn(
-            "chunk_end_ms",
-            F.least(
-                F.col("chunk_start_ms") + chunk_ms, F.col("duration_ms")
-            ),
-        )
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Expression-side frame-sampling plan for videos: one row per planned
-    frame timestamp (the decode itself is the stubbed stage)."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )

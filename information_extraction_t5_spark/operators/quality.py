@@ -148,11 +148,6 @@ def dup_line_stats_from(lines: Column) -> tuple[Column, Column, Column]:
     return n, dup_frac, dup_char_frac
 
 
-def dup_line_stats(col: Column) -> tuple[Column, Column, Column]:
-    """Compatibility wrapper over TEXT input (single-use contexts)."""
-    return dup_line_stats_from(F.split(col, "\n"))
-
-
 def top_ngram_char_frac_from(grams: Column, text_len: Column) -> Column:
     """max over distinct n-grams of count*length, / text length — from a
     materialized grams array."""
@@ -162,11 +157,6 @@ def top_ngram_char_frac_from(grams: Column, text_len: Column) -> Column:
     ).otherwise(best.cast("double") / text_len)
 
 
-def top_ngram_char_frac(col: Column, n: int) -> Column:
-    """Compatibility wrapper (short text): see top_ngram_char_frac_from."""
-    return top_ngram_char_frac_from(word_ngrams(col, n), F.length(col))
-
-
 def dup_ngram_char_frac_from(grams: Column, text_len: Column) -> Column:
     """sum over n-grams with count>=2 of count*length, / text length,
     capped at 1.0 — from a materialized grams array."""
@@ -174,11 +164,6 @@ def dup_ngram_char_frac_from(grams: Column, text_len: Column) -> Column:
     return F.when(text_len == 0, F.lit(0.0)).otherwise(
         F.least(F.lit(1.0), dup_chars.cast("double") / text_len)
     )
-
-
-def dup_ngram_char_frac(col: Column, n: int) -> Column:
-    """Compatibility wrapper (short text): see dup_ngram_char_frac_from."""
-    return dup_ngram_char_frac_from(word_ngrams(col, n), F.length(col))
 
 
 def repetition_stats(

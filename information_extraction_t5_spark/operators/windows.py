@@ -175,96 +175,3 @@ def sliding_windows_sql(
             "window_offset",
         )
     )
-
-
-def build_context(
-    documents: DataFrame,
-    mode: str = "windows",
-    max_size: int = 4000,
-    max_tokens: int = 512,
-    window_overlap: float = 0.5,
-    max_windows: int = 3,
-    question: str = "Qual?",
-    use_sentence_id: bool = False,
-    anchor_col: Optional[str] = None,
-    proportion_before: float = 0.2,
-    tokenizer_name: Optional[str] = None,
-) -> DataFrame:
-    """Context-strategy dispatcher (reference get_context,
-    context.py:344-454): ``max_size | position | windows | token |
-    position_token | windows_token`` -> window rows.
-
-    Position modes need ``anchor_col`` (char offset of the keyword the
-    window must contain).  All modes return WINDOW_ROW_SCHEMA.
-    """
-    from information_extraction_t5_spark.core.windows import (
-        default_token_spans,
-        token_window_at,
-        window_at,
-    )
-
-    if mode == "max_size":
-        return head_window_sql(documents, max_size, question).select(
-            "conv_id", F.lit(0).alias("window_id"), "window_text",
-            F.lit(0).alias("window_offset"),
-        )
-    if mode == "windows":
-        return sliding_windows_exact(
-            documents,
-            WindowSpec(max_size, window_overlap, max_windows, question,
-                       use_sentence_id),
-        )
-    if mode in ("token", "windows_token"):
-        return sliding_windows_token_exact(
-            documents, max_tokens,
-            window_overlap if mode == "windows_token" else 1.0,
-            max_windows if mode == "windows_token" else 1,
-            question, use_sentence_id, tokenizer_name,
-        )
-    if mode in ("position", "position_token"):
-        if anchor_col is None:
-            raise ValueError(f"mode {mode!r} needs anchor_col")
-
-        is_token = mode == "position_token"
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = {"conv_id": [], "window_id": [], "window_text": [],
-                       "window_offset": []}
-                for cid, text, anchor in zip(
-                    pdf["conv_id"], pdf["text"], pdf["_anchor"]
-                ):
-                    text = text or ""
-                    a = int(anchor or 0)
-                    if is_token:
-                        w = token_window_at(
-                            text, a, max_tokens, question, use_sentence_id,
-                            tokenizer=default_token_spans,
-                            proportion_before=proportion_before,
-                        )
-                    else:
-                        w = window_at(
-                            text, a, max_size, question, use_sentence_id,
-                            proportion_before=proportion_before,
-                        )
-                    out["conv_id"].append(cid)
-                    out["window_id"].append(0)
-                    out["window_text"].append(w.text)
-                    out["window_offset"].append(w.offset)
-                yield pd.DataFrame(out)
-
-        return documents.select(
-            "conv_id", "text", F.col(anchor_col).alias("_anchor")
-        ).mapInPandas(gen, schema=WINDOW_ROW_SCHEMA)
-    raise ValueError(f"unknown context mode: {mode!r}")
-
-
-def head_window_sql(documents: DataFrame, max_size: int,
-                    question: str = "Qual?",
-                    text_col: str = "text") -> DataFrame:
-    """First-N-chars head truncation + ' ...' (reference: context.py:26-36)."""
-    budget = max_size - len(f"question: {question} context: ")
-    return documents.withColumn(
-        "window_text",
-        F.concat(F.substring(F.col(text_col), 1, budget - 4), F.lit(" ...")),
-    )

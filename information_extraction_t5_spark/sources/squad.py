@@ -10,55 +10,19 @@ between that nested format and the engine's flat qa_windows table
     doc_id, window_id, window_text, qa_id, question,
     answer_text, answer_start
 
-Reading uses spark.read.json with an explicit nested schema + explode —
-distributed, schema-checked; writing groups back with collect_list.
+Writing groups rows back with collect_list into one nested document per
+JSON line; reading uses spark.read.json with an explicit nested schema +
+explode — distributed, schema-checked.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SQUAD_SCHEMA = (
-    "data array<struct<"
-    "  title: string,"
-    "  paragraphs: array<struct<"
-    "    context: string,"
-    "    qas: array<struct<"
-    "      question: string,"
-    "      id: string,"
-    "      answers: array<struct<answer_start: int, text: string>>"
-    "    >>"
-    "  >>"
-    ">>, version string"
-)
-
 QA_WINDOWS_COLUMNS = [
     "doc_id", "window_id", "window_text", "qa_id", "question",
     "answer_text", "answer_start",
 ]
-
-
-def read_squad_json(spark: SparkSession, path: str) -> DataFrame:
-    """SQuAD JSON -> flat qa_windows rows (one per question-answer)."""
-    raw = spark.read.schema(SQUAD_SCHEMA).option("multiLine", True).json(path)
-    docs = raw.select(F.explode("data").alias("doc"))
-    paragraphs = docs.select(
-        F.col("doc.title").alias("doc_id"),
-        F.posexplode("doc.paragraphs").alias("window_id", "para"),
-    )
-    qas = paragraphs.select(
-        "doc_id", "window_id",
-        F.col("para.context").alias("window_text"),
-        F.explode("para.qas").alias("qa"),
-    )
-    first_answer = F.element_at(F.col("qa.answers"), 1)
-    return qas.select(
-        "doc_id", "window_id", "window_text",
-        F.col("qa.id").alias("qa_id"),
-        F.col("qa.question").alias("question"),
-        first_answer["text"].alias("answer_text"),
-        first_answer["answer_start"].alias("answer_start"),
-    )
 
 
 def to_squad_frame(qa_windows: DataFrame,

@@ -42,10 +42,12 @@ def _names(spark):
 
 
 def _reference_buckets(df, fast):
-    """(id, val, band, band_key) from the row-wise signature array."""
+    """(id, val, band, band_key) from the row-wise signature array; NULL
+    names get no bucket."""
     rows_per_band = N_HASHES // BANDS
-    sig = with_minhash_signature(df, "sig", F.col("name"),
-                                 n_hashes=N_HASHES, k=K, fast=fast)
+    sig = with_minhash_signature(df.filter(F.col("name").isNotNull()), "sig",
+                                 F.col("name"), n_hashes=N_HASHES, k=K,
+                                 fast=fast)
     return sig.select(
         "id", F.col("name").alias("val"),
         F.posexplode(F.array(*[
@@ -91,10 +93,12 @@ def test_band_keys_match_row_signature(spark, fast):
     df = _names(spark)
     ref = _rows(_reference_buckets(df, fast))
     assert _rows(_aggregate_buckets(df, fast)) == ref
-    assert sum(ref.values()) == len(ROWS) * BANDS
+    n_texts = sum(1 for _, name in ROWS if name is not None)
+    assert sum(ref.values()) == n_texts * BANDS
+    # NULL names (ids 1, 15) have no bucket; empty names (2, 16) keep one
+    ids = {i for i, _, _, _ in ref}
+    assert {1, 15}.isdisjoint(ids) and {2, 16} <= ids
     if not fast:
-        # md5 of a NULL shingle is NULL in every seed: empty band keys
-        assert ref[(1, None, 0, "")] == 1
         drop_val = Counter()
         for (i, _, b, key), n in ref.items():
             drop_val[(i, b, key)] += n
@@ -141,8 +145,7 @@ def test_fuzzy_name_edges_match_row_signature(spark):
     want = {
         (a, b) for a, b, va, vb in _pairs(
             _reference_buckets(name_rep, False).collect(), 64)
-        if va is not None and vb is not None
-        and abs(len(va) - len(vb)) <= 2 and _lev(va, vb) <= 2
+        if abs(len(va) - len(vb)) <= 2 and _lev(va, vb) <= 2
     }
     got = fuzzy_name_edges(triples, max_dist=2).collect()
     assert {tuple(r) for r in got} == want
@@ -183,3 +186,34 @@ def test_fuzzy_stage_hashes_distinct_names_on_every_core(spark):
     hashing = min(i for i, ln in enumerate(plan) if "min(md5(" in ln)
     dedup = min(i for i, ln in enumerate(plan) if "min(id#" in ln)
     assert hashing < dedup < plan.index(exchanges[0])
+
+
+def test_null_texts_get_no_bucket(spark):
+    """Many NULL texts beside a planted near-duplicate pair: no candidate
+    pair has a NULL side, the verify finds only the planted pair, and
+    near-dedup keeps every NULL document."""
+    from information_extraction_t5_spark.operators.dedup import (
+        jaccard_dedup_pairs,
+        near_dedup_survivors,
+    )
+
+    words = [f"palavra{i:02d}" for i in range(20)]
+    near = list(words)
+    near[10] = "trocada"  # kills 3 of 18 word 3-grams: Jaccard 15/21
+    texts = [(1, " ".join(words)), (2, " ".join(near))]
+    texts += [(10 + i, f"documento distinto numero {i} sobre assunto {i * 7}")
+              for i in range(10)]
+    null_ids = list(range(100, 160))
+    texts += [(i, None) for i in null_ids]
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+
+    pairs = lsh_candidate_pairs(df, "doc_id", "text", 16, 8).collect()
+    assert (1, 2) in {tuple(r) for r in pairs}
+    assert not {i for r in pairs for i in r} & set(null_ids)
+
+    dups = jaccard_dedup_pairs(df, "doc_id", "text", threshold=0.7)
+    assert [(r["id_a"], r["id_b"]) for r in dups.collect()] == [(1, 2)]
+
+    kept = {r["doc_id"] for r in near_dedup_survivors(
+        df, "doc_id", "text", threshold=0.7).collect()}
+    assert kept == {i for i, _ in texts} - {2}

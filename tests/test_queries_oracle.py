@@ -68,13 +68,6 @@ def test_oracle_parity(spark, duck, name):
     assert _value_hash(sdf) == _value_hash(ddf)
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, name):
-    df = QUERIES[name](spark, SF)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
-
-
 def test_entry_smoke(spark):
     out = entrymod.entry(spark)
     assert out.count() > 0

@@ -1,8 +1,7 @@
-"""k-means IVF, n-gram LID, multimodal plans."""
+"""k-means IVF and n-gram LID."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from information_extraction_t5_spark.operators import multimodal as mm
 from information_extraction_t5_spark.operators.similarity import (
     brute_force_topk,
     ivf_assign,
@@ -48,28 +47,6 @@ def test_language_id_ngram(spark):
     ).collect()
     for r in got:
         assert r["lang"] == r["expected"], (r["expected"], r["lang"])
-
-
-def test_multimodal_plans(spark):
-    media = mm.synthetic_media_df(spark, n=24)
-    resize = mm.image_resize_plan(media, max_side=128).collect()
-    assert resize
-    for r in resize:
-        assert max(r["target_w"], r["target_h"]) <= 128
-        ar_in = r["meta"]["width"] / r["meta"]["height"]
-        ar_out = r["target_w"] / r["target_h"]
-        assert abs(ar_in - ar_out) / ar_in < 0.05  # aspect preserved
-
-    chunks = mm.audio_chunk_plan(media, chunk_ms=400, overlap_ms=100)
-    pdf = chunks.toPandas()
-    assert (pdf["chunk_end_ms"] <= pdf["duration_ms"]).all()
-    # consecutive chunks overlap by ~100ms
-    one = pdf[pdf["media_id"] == pdf["media_id"].iloc[0]].sort_values(
-        "chunk_idx"
-    )
-    if len(one) > 1:
-        starts = one["chunk_start_ms"].tolist()
-        assert all(b - a == 300 for a, b in zip(starts, starts[1:]))
 
 
 def _planted_corpus(spark, n_noise=200, n_near=25, dim=16, seed=7):

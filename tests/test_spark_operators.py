@@ -284,11 +284,6 @@ def test_multimodal_plumbing(spark):
     assert sorted(r["media_id"] for r in feats) == sorted(
         r["media_id"] for r in again
     )
-    plan = mm.frame_sample_plan(media, every_ms=500)
-    assert plan.filter(F.col("frame_ts_ms") % 500 != 0).count() == 0
-
-    with pytest.raises(NotImplementedError):
-        mm.decode_real(b"x", "image")
 
 
 def test_near_dedup_survivors_chain(spark):
